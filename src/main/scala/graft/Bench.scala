@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
   *
@@ -103,17 +101,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
 
     // optional args = subset of query names, for targeted local profiling;
     // the driver invokes with no args and gets the full suite

@@ -1,7 +1,6 @@
 package graft
 
 import graft.exec.Executor
-import org.apache.spark.sql.SparkSession
 
 /** Randomized dialect-SQL differential fuzzer (r8/r9 carried item):
   * generates random-but-valid dialect SELECTs (projection × alias ×
@@ -259,14 +258,7 @@ object DialectFuzz {
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 1000
     val seed = if (args.length > 3) args(3).toLong else 10L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-dialectfuzz")
     new java.io.File(outDir).mkdirs()
     val ex = Executor.forDir(spark, sfDir)
     var failed = 0
@@ -279,12 +271,8 @@ object DialectFuzz {
         System.err.println(s"[fuzz] ${c.name} FAILED: ${c.dialect}\n  ${e.getMessage}")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val json = all.map(c =>
-      s"${q(c.name)}: {\"dialect\": ${q(c.dialect)}, \"ansi\": ${q(c.ansi)}}")
+      s"${Json.str(c.name)}: {\"dialect\": ${Json.str(c.dialect)}, \"ansi\": ${Json.str(c.ansi)}}")
       .mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/fuzz_cases.json"), json)

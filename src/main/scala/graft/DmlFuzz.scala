@@ -225,14 +225,7 @@ object DmlFuzz {
     val outDir = args(0)
     val n = if (args.length > 1) args(1).toInt else 120
     val seed = if (args.length > 2) args(2).toLong else 11L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-dmlfuzz")
     new java.io.File(outDir).mkdirs()
     val engine = new Engine(spark,
       java.nio.file.Files.createTempDirectory("graft_dmlfuzz").toString)
@@ -254,14 +247,10 @@ object DmlFuzz {
         System.err.println(s"[dmlfuzz] ${c.name} FAILED: ${e.getMessage}")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"; case ch => ch.toString
-    } + "\""
     val json = all.map { c =>
       val stmts = (c.createAnsi +: c.steps.flatMap(_.ansi))
-        .map(q).mkString("[", ",", "]")
-      s"${q(c.name)}: {\"table\": ${q(c.table)}, \"stmts\": $stmts}"
+        .map(Json.str).mkString("[", ",", "]")
+      s"${Json.str(c.name)}: {\"table\": ${Json.str(c.table)}, \"stmts\": $stmts}"
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/dml_cases.json"), json)

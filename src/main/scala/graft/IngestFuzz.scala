@@ -196,14 +196,7 @@ object IngestFuzz {
     val outDir = args(0)
     val n = if (args.length > 1) args(1).toInt else 120
     val seed = if (args.length > 2) args(2).toLong else 12L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-ingestfuzz")
     new java.io.File(outDir).mkdirs()
     val engine = new Engine(spark,
       java.nio.file.Files.createTempDirectory("graft_ingfuzz").toString)
@@ -231,16 +224,12 @@ object IngestFuzz {
         System.err.println(s"[ingfuzz] ${c.name} FAILED: ${e.getMessage}")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"; case ch => ch.toString
-    } + "\""
     val json = all.map { c =>
-      val cols = c.header.map(q).mkString("[", ",", "]")
+      val cols = c.header.map(Json.str).mkString("[", ",", "]")
       val sels = c.selects.map(sc =>
-        s"{\"label\": ${q(sc.label)}, \"ansi\": ${q(sc.ansi)}}")
+        s"{\"label\": ${Json.str(sc.label)}, \"ansi\": ${Json.str(sc.ansi)}}")
         .mkString("[", ",", "]")
-      s"${q(c.name)}: {\"table\": ${q(c.table)}, \"csv\": ${q(s"${c.name}.csv")}, " +
+      s"${Json.str(c.name)}: {\"table\": ${Json.str(c.table)}, \"csv\": ${Json.str(s"${c.name}.csv")}, " +
         s"\"header\": $cols, \"selects\": $sels}"
     }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(

@@ -1,43 +1,39 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (optimization rounds): run named SparkEntry queries
   * and print a per-job / per-stage time breakdown from a
   * SparkListener, plus the wall split between driver-side work
   * (planning, collects between jobs) and cluster-side job time.
   * Usage: runMain graft.JobProfile <sfDir> <query> [query...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROFILE_PASSES
+  * Env: SPARK_GRAFT_CPUS (default: all cores), SPARK_GRAFT_PROFILE_PASSES
   * (default 2 — pass 1 warms codegen/JIT, last pass is reported).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobprofile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-jobprofile")
 
     case class Job(id: Int, start: Long, var end: Long = -1L,
       var stages: Int = 0, var tasks: Int = 0, var stageMs: Long = 0L)
     val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
+    // stage → the job whose JobStart listed it first (a later job that
+    // reuses the stage's shuffle output lists it too, but skips it)
+    val stageJob = scala.collection.mutable.Map[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized { jobs(e.jobId) = Job(e.jobId, e.time) }
+        jobs.synchronized {
+          jobs(e.jobId) = Job(e.jobId, e.time)
+          e.stageIds.foreach(s => if (!stageJob.contains(s)) stageJob(s) = e.jobId)
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         jobs.synchronized {
           val info = e.stageInfo
-          // attribute the stage to the most recent unfinished job
-          jobs.values.lastOption.foreach { j =>
+          stageJob.get(info.stageId).flatMap(jobs.get).foreach { j =>
             j.stages += 1
             j.tasks += info.numTasks
             for (s <- info.submissionTime; c <- info.completionTime)
@@ -49,7 +45,7 @@ object JobProfile {
 
     args.drop(1).foreach { name =>
       (1 to passes).foreach { pass =>
-        jobs.synchronized { jobs.clear() }
+        jobs.synchronized { jobs.clear(); stageJob.clear() }
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.io.StdIn
 
 /** Interactive CLI REPL — the reference's primary entry point
@@ -11,16 +10,7 @@ import scala.io.StdIn
 object Repl {
   def main(args: Array[String]): Unit = {
     val dbPath = args.headOption.getOrElse("graft_db")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-repl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-repl")
     val engine = new Engine(spark, dbPath)
     println(s"graft engine — db at $dbPath. Statements end with newline; 'exit' quits.")
     var line = StdIn.readLine("graft> ")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,17 +15,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = "/tmp/graft_scale10"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scale-probe")
 
     // guard on the _SUCCESS marker of the LAST write — the directory
     // itself appears at write START, so only the marker proves the
@@ -81,7 +72,7 @@ object ScaleProbe {
 
     val li = Tables.load(spark, out, "lineitem")
     val docs = Tables.load(spark, out, "documents")
-    println(s"[probe] cpus=$cpus lineitem=${li.count()} docs=${docs.count()}")
+    println(s"[probe] cpus=${Sessions.cpus} lineitem=${li.count()} docs=${docs.count()}")
 
     time("q1 shape over 6M rows") {
       li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
@@ -468,7 +459,7 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$erDir/customer.parquet")
     val erKeys = graft.ops.MasterData.prefixKeys(col("nm"), 24, 30)
     locally {
-      val corpus = graft.queries.Round9bQueries.namedCorpus(spark, erDir)
+      val corpus = graft.queries.DedupQueries.namedCorpus(spark, erDir)
       val members = graft.ops.MasterData.linkageMembers(corpus, "id", "nm", erKeys)
       val dfs = graft.ops.MasterData.linkageBlockDfs(members)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -486,13 +477,13 @@ object ScaleProbe {
     }
     time("entity resolution over the 10x name corpus (156k records)") {
       graft.ops.MasterData.resolveEntities(
-        graft.queries.Round9bQueries.namedCorpus(spark, erDir), "id", "nm",
+        graft.queries.DedupQueries.namedCorpus(spark, erDir), "id", "nm",
         prefixLen = 24, maxDist = 1, maxBlockDf = 64, revPrefixLen = 30).count()
     }
     // incremental: stored state built once (the daily job reads it),
     // the timed op absorbs a 1/10 batch — candidate work O(batch·block)
     locally {
-      val corpus = graft.queries.Round9bQueries.namedCorpus(spark, erDir)
+      val corpus = graft.queries.DedupQueries.namedCorpus(spark, erDir)
       val stored = corpus.filter(col("id") % 10 =!= 0)
       val memDir = s"$erDir/members.parquet"
       if (!Files.exists(Paths.get(s"$memDir/_SUCCESS"))) {

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** 100x scale probe (r10 verdict item 4): the 10x probe
@@ -59,17 +59,9 @@ object ScaleProbe100 {
       s"valid: ${sections.mkString("|")}")
     def enabled(section: String): Boolean =
       args.isEmpty || args.contains(section)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = "/tmp/graft_scale100"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe-100x")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scale-probe-100x")
 
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
@@ -101,7 +93,7 @@ object ScaleProbe100 {
 
     if (enabled("dedup")) locally {
     val docs = corpus100()
-    println(s"[probe100] cpus=$cpus docs=${docs.count()}")
+    println(s"[probe100] cpus=${Sessions.cpus} docs=${docs.count()}")
 
     // true pairs from the group structure (exact-text groups)
     val truePairs = docs.groupBy(xxhash64(col("text")))

@@ -4,8 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.Executors
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** HTTP REST surface (reference entry point 2, `cmd/server/main.go`):
@@ -29,6 +28,9 @@ final class Server(engine: Engine, port: Int) {
   // (cmd/server/main.go), a divergence we take deliberately.
   private val bindHost = sys.env.getOrElse("GRAFT_BIND_HOST", "127.0.0.1")
   private val server = HttpServer.create(new InetSocketAddress(bindHost, port), 0)
+  // non-daemon request threads: stop() must shut them down or the JVM
+  // cannot exit
+  private val pool = Executors.newFixedThreadPool(8)
   private val convDir: Path = Paths.get(engine.catalog.dbPath, "conversations")
   Files.createDirectories(convDir)
 
@@ -44,11 +46,15 @@ final class Server(engine: Engine, port: Int) {
     // the /api contexts don't — the static chat console (reference
     // `web/index.html` + `web/static` assets, re-implemented)
     server.createContext("/", (ex: HttpExchange) => handleStatic(ex))
-    server.setExecutor(Executors.newFixedThreadPool(8))
+    server.setExecutor(pool)
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdownNow()
+    pool.awaitTermination(10, TimeUnit.SECONDS)
+  }
 
   private def handle(ex: HttpExchange, f: HttpExchange => (Int, String)): Unit = {
     val (status, body) = try f(ex)
@@ -311,16 +317,7 @@ object Server {
   def main(args: Array[String]): Unit = {
     val dbPath = args.headOption.getOrElse("graft_db")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-server")
     val server = new Server(new Engine(spark, dbPath), port)
     server.start()
     println(s"graft server listening on :${server.boundPort}, db at $dbPath")

@@ -1,13 +1,24 @@
 package graft
 
+import graft.queries.{BehaviorQueries, DedupQueries, DialectQueries,
+  GraphQueries, LayoutQueries, MediaQueries, PipelineQueries,
+  RelationalQueries, RetrievalQueries, SamplingQueries, StreamQueries,
+  TextQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One registered query: its Spark plan builder over an sf directory and
+  * the equivalent ANSI SQL that DuckDB runs on the same parquet tables.
+  */
+final case class QueryDef(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: String)
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` aggregates every module's operator pack; each entry has a
-  * matching DuckDB oracle in `oracleSql` when the semantics are
-  * ANSI-SQL-expressible (driver hash-compares at sf0.01), else the
-  * driver records a rows-only check.
+  * Every query is one [[QueryDef]] in a domain pack; the registry lists
+  * each pack once. `Verify` dumps every query's rows at sf0.01, and
+  * `tools/check.py` hash-compares them against the DuckDB oracles.
   */
 object SparkEntry {
 
@@ -15,124 +26,44 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every domain pack, each once, under the name an error reports. */
+  private val packs: Seq[(String, Seq[QueryDef])] = Seq(
+    "RelationalQueries" -> RelationalQueries.defs,
+    "DialectQueries" -> DialectQueries.defs,
+    "TextQueries" -> TextQueries.defs,
+    "DedupQueries" -> DedupQueries.defs,
+    "RetrievalQueries" -> RetrievalQueries.defs,
+    "GraphQueries" -> GraphQueries.defs,
+    "MediaQueries" -> MediaQueries.defs,
+    "StreamQueries" -> StreamQueries.defs,
+    "BehaviorQueries" -> BehaviorQueries.defs,
+    "LayoutQueries" -> LayoutQueries.defs,
+    "SamplingQueries" -> SamplingQueries.defs,
+    "PipelineQueries" -> PipelineQueries.defs)
+
+  /** The packs' definitions by name; a name defined twice throws, naming
+    * both packs, instead of letting the later one shadow the earlier.
+    */
+  def registry(packs: Seq[(String, Seq[QueryDef])]): Map[String, QueryDef] =
+    packs.foldLeft(Map.empty[String, (String, QueryDef)]) {
+      case (acc, (pack, defs)) =>
+        defs.foldLeft(acc) { (m, d) =>
+          m.get(d.name).foreach { case (first, _) =>
+            throw new IllegalArgumentException(
+              s"query ${d.name} is defined in both $first and $pack")
+          }
+          m.updated(d.name, (pack, d))
+        }
+    }.map { case (name, (_, d)) => name -> d }
+
+  private val defs: Map[String, QueryDef] = registry(packs)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-    graft.queries.DialectQueries.queries ++
-    graft.queries.PipelineQueries.queries ++
-    graft.queries.StreamQueries.queries ++
-    graft.queries.CompositionQueries.queries ++
-    graft.queries.ExtendedQueries.queries ++
-    graft.queries.Round3Queries.queries ++
-    graft.queries.Round4Queries.queries ++
-    graft.queries.Round6Queries.queries ++
-    graft.queries.Round7Queries.queries ++
-    graft.queries.Round8Queries.queries ++
-    graft.queries.Round8bQueries.queries ++
-    graft.queries.Round8cQueries.queries ++
-    graft.queries.Round8dQueries.queries ++
-    graft.queries.Round8eQueries.queries ++
-    graft.queries.Round8fQueries.queries ++
-    graft.queries.Round8gQueries.queries ++
-    graft.queries.Round8hQueries.queries ++
-    graft.queries.Round8iQueries.queries ++
-    graft.queries.Round8jQueries.queries ++
-    graft.queries.Round8kQueries.queries ++
-    graft.queries.Round8lQueries.queries ++
-    graft.queries.Round8mQueries.queries ++
-    graft.queries.Round8nQueries.queries ++
-    graft.queries.Round8oQueries.queries ++
-    graft.queries.Round8pQueries.queries ++
-    graft.queries.Round8qQueries.queries ++
-    graft.queries.Round8rQueries.queries ++
-    graft.queries.Round8sQueries.queries ++
-    graft.queries.Round8tQueries.queries ++
-    graft.queries.Round8uQueries.queries ++
-    graft.queries.Round8vQueries.queries ++
-    graft.queries.Round8wQueries.queries ++
-    graft.queries.Round8xQueries.queries ++
-    graft.queries.Round8yQueries.queries ++
-    graft.queries.Round9aQueries.queries ++
-    graft.queries.Round9bQueries.queries ++
-    graft.queries.Round9cQueries.queries ++
-    graft.queries.Round9dQueries.queries ++
-    graft.queries.Round10aQueries.queries ++
-    graft.queries.Round10bQueries.queries ++
-    graft.queries.Round10cQueries.queries ++
-    graft.queries.Round10dQueries.queries ++
-    graft.queries.Round10eQueries.queries ++
-    graft.queries.Round10fQueries.queries ++
-    graft.queries.Round11aQueries.queries ++
-    graft.queries.Round11bQueries.queries ++
-    graft.queries.Round11cQueries.queries ++
-    graft.queries.Round11dQueries.queries ++
-    graft.queries.Round11eQueries.queries ++
-    graft.queries.Round11fQueries.queries ++
-    graft.queries.Round12aQueries.queries ++
-    graft.queries.Round12bQueries.queries ++
-    graft.queries.Round13aQueries.queries ++
-    graft.queries.Round14Queries.queries ++
-    graft.queries.Round15Queries.queries ++
-    graft.queries.Round16Queries.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map { case (name, d) => name -> d.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-    graft.queries.DialectQueries.oracles ++
-    graft.queries.PipelineQueries.oracles ++
-    graft.queries.StreamQueries.oracles ++
-    graft.queries.CompositionQueries.oracles ++
-    graft.queries.ExtendedQueries.oracles ++
-    graft.queries.Round3Queries.oracles ++
-    graft.queries.Round4Queries.oracles ++
-    graft.queries.Round6Queries.oracles ++
-    graft.queries.Round7Queries.oracles ++
-    graft.queries.Round8Queries.oracles ++
-    graft.queries.Round8bQueries.oracles ++
-    graft.queries.Round8cQueries.oracles ++
-    graft.queries.Round8dQueries.oracles ++
-    graft.queries.Round8eQueries.oracles ++
-    graft.queries.Round8fQueries.oracles ++
-    graft.queries.Round8gQueries.oracles ++
-    graft.queries.Round8hQueries.oracles ++
-    graft.queries.Round8iQueries.oracles ++
-    graft.queries.Round8jQueries.oracles ++
-    graft.queries.Round8kQueries.oracles ++
-    graft.queries.Round8lQueries.oracles ++
-    graft.queries.Round8mQueries.oracles ++
-    graft.queries.Round8nQueries.oracles ++
-    graft.queries.Round8oQueries.oracles ++
-    graft.queries.Round8pQueries.oracles ++
-    graft.queries.Round8qQueries.oracles ++
-    graft.queries.Round8rQueries.oracles ++
-    graft.queries.Round8sQueries.oracles ++
-    graft.queries.Round8tQueries.oracles ++
-    graft.queries.Round8uQueries.oracles ++
-    graft.queries.Round8vQueries.oracles ++
-    graft.queries.Round8wQueries.oracles ++
-    graft.queries.Round8xQueries.oracles ++
-    graft.queries.Round8yQueries.oracles ++
-    graft.queries.Round9aQueries.oracles ++
-    graft.queries.Round9bQueries.oracles ++
-    graft.queries.Round9cQueries.oracles ++
-    graft.queries.Round9dQueries.oracles ++
-    graft.queries.Round10aQueries.oracles ++
-    graft.queries.Round10bQueries.oracles ++
-    graft.queries.Round10cQueries.oracles ++
-    graft.queries.Round10dQueries.oracles ++
-    graft.queries.Round10eQueries.oracles ++
-    graft.queries.Round10fQueries.oracles ++
-    graft.queries.Round11aQueries.oracles ++
-    graft.queries.Round11bQueries.oracles ++
-    graft.queries.Round11cQueries.oracles ++
-    graft.queries.Round11dQueries.oracles ++
-    graft.queries.Round11eQueries.oracles ++
-    graft.queries.Round11fQueries.oracles ++
-    graft.queries.Round12aQueries.oracles ++
-    graft.queries.Round12bQueries.oracles ++
-    graft.queries.Round13aQueries.oracles ++
-    graft.queries.Round14Queries.oracles ++
-    graft.queries.Round15Queries.oracles ++
-    graft.queries.Round16Queries.oracles
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    defs.map { case (name, d) => name -> d.oracle }
 }

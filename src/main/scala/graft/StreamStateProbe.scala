@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming state-size audit (r6 verdict item 8): StreamingSpec proves
@@ -32,18 +31,10 @@ import org.apache.spark.sql.functions._
   */
 object StreamStateProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE", "10").toInt
     val out = s"/tmp/graft_scale$scale"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-state-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-stream-state-probe")
 
     // 10x events with offset ids (the ScaleProbe synthesis), written
     // ts-range-sorted: file part-i covers the i-th time slice, so a

@@ -120,28 +120,38 @@ object Tables {
   private def storedFixtureWith(spark: SparkSession, dir: String,
       name: String, partitionCols: Seq[String])(
       build: => DataFrame): DataFrame = {
-    val key = name + "_" + dirFingerprint(dir)
+    val path = stagedFixtureDir(name + "_" + dirFingerprint(dir)) { stage =>
+      val w = build.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(stage.toString)
+    }
+    spark.read.parquet(path.toString)
+  }
+
+  /** The build-once directory `key` under the fixture root. `write`
+    * fills a per-process stage, and an atomic rename publishes it whole;
+    * a directory counts as built once it holds `marker`. When the
+    * rename fails because another process won the race, that process's
+    * copy is returned; when it fails for any other reason, the caller
+    * gets its own staged copy, never a root without the fixture.
+    */
+  private[graft] def stagedFixtureDir(key: String, marker: String = "_SUCCESS")(
+      write: java.io.File => Unit): java.io.File = {
     val root = new java.io.File(
       new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures"), key)
-    if (!new java.io.File(root, "_SUCCESS").exists()) {
+    def built(d: java.io.File) = new java.io.File(d, marker).exists()
+    if (built(root)) root
+    else {
       if (root.exists()) // debris from a crashed build
         org.apache.commons.io.FileUtils.deleteDirectory(root)
       val stage = new java.io.File(root.getParentFile,
         key + "_stage_" + java.lang.ProcessHandle.current().pid())
-      val w = build.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(stage.toString)
-      if (!stage.renameTo(root)) {
-        // rename fails either because another process won the race
-        // (root now exists — read it) or for a non-race reason (read
-        // our own staged copy rather than a nonexistent root)
-        if (new java.io.File(root, "_SUCCESS").exists()) {
-          org.apache.commons.io.FileUtils.deleteDirectory(stage)
-        } else {
-          return spark.read.parquet(stage.toString)
-        }
-      }
+      write(stage)
+      if (stage.renameTo(root)) root
+      else if (built(root)) {
+        org.apache.commons.io.FileUtils.deleteDirectory(stage)
+        root
+      } else stage
     }
-    spark.read.parquet(root.toString)
   }
 }

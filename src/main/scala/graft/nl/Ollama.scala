@@ -1,5 +1,6 @@
 package graft.nl
 
+import graft.Json
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
@@ -51,12 +52,8 @@ object Ollama {
     if (!config.enabled) return None
     try {
       val prompt = buildPrompt(query, tables)
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
       val body =
-        s"""{"model":"${esc(config.model)}","prompt":"${esc(prompt)}","stream":false,
+        s"""{"model":${Json.str(config.model)},"prompt":${Json.str(prompt)},"stream":false,
            |"options":{"temperature":0.1,"num_predict":100}}""".stripMargin
       val client = HttpClient.newBuilder()
         .connectTimeout(Duration.ofSeconds(config.timeoutSec)).build()

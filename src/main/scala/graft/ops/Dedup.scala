@@ -225,7 +225,7 @@ object Dedup {
     * deterministic function of the two token streams, reproducible by
     * any engine that can count n-grams — which is what makes the
     * corpus-prep pipeline's survivor set oracle-checkable end to end
-    * (see Pipelines.prepareCorpus / CompositionQueries). A qualifying
+    * (see Pipelines.prepareCorpus / PipelineQueries). A qualifying
     * pair is missed only if every band misses:
     * P ≤ (1 − θ^(k/bands))^bands ≈ 4e-8 per pair at θ = 0.9 with
     * 16×4 banding — and exactly 0 for identical shingle sets, where

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
 private[queries] object GraphFixtures {
 
   /** The item key inside events.props JSON. */
-  private val itemOf: Column =
+  private[queries] val itemOf: Column =
     get_json_object(col("props"), "$.k").cast("long")
 
   /** Symmetrized, deduplicated user↔item click edge list (items offset

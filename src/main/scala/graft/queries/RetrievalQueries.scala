@@ -1,0 +1,1728 @@
+package graft.queries
+
+import graft.{QueryDef, Tables}
+import graft.functions.VectorExpressions
+import graft.ops.{Search, Similarity}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** Retrieval queries: brute-force and LSH/IVF approximate top-k,
+  * product quantization, SQ8 scalar quantization and the composed
+  * IVF+SQ8 path with their recall rows, k-NN graphs, clustering, MMR
+  * re-ranking, and full-text search over inverted postings.
+  */
+object RetrievalQueries {
+
+  /** The fixed ANN probe vector: embedding of vec_id=0 (collecting one
+    * row to form the query literal is input preparation, not a data
+    * path).
+    */
+  private def queryVec(s: SparkSession, dir: String): Array[Double] =
+    Tables.load(s, dir, "embeddings")
+      .filter(col("vec_id") === 0)
+      .select(col("embedding")).head()
+      .getSeq[Float](0).map(_.toDouble).toArray
+
+  /** The embeddings table plus `n` exact copies of the probe vector
+    * (vec_id 0) planted at max(vec_id)+1 .. +n: an exact copy signs
+    * every hyperplane like the probe and has cosine at the 1.0
+    * ceiling, so ANN top-(n+1) results become analytic — the r7
+    * planted-certainty recipe applied to the two approximate top-k
+    * rows the r7 verdict flagged as no_oracle.
+    */
+  private def withProbeCopies(s: SparkSession, dir: String, n: Int): DataFrame = {
+    val emb = Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val off = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
+    val copies = emb.filter(col("vec_id") === 0)
+      .crossJoin(s.range(0, n))
+      .select((col("id") + off).as("vec_id"), col("embedding"))
+    emb.unionByName(copies)
+  }
+
+  /** Exact copies of every `modulo`-th row appended at id+`offset` —
+    * planted ground truth for the hash-family dedup operators. An exact
+    * copy produces an identical signature/fingerprint DETERMINISTICALLY
+    * (min over the same shingle hashes, the same ±1 votes, the same
+    * hyperplane signs), so "every planted pair surfaces, at the exact
+    * similarity ceiling" is a DuckDB-checkable recall statement about
+    * operators whose hash families no other engine can reproduce.
+    */
+  private def withPlantedCopies(df: DataFrame, idCol: String,
+      modulo: Int): (DataFrame, Long) = {
+    // offset = max(id)+1, not a fixed 10^6: a corpus whose ids reach the
+    // constant would alias planted ids onto real ones and corrupt both
+    // the LSH join and the oracle's id_b arithmetic. One-row agg over a
+    // pruned scan — input preparation, same class as queryVec.
+    val offset = df.agg(max(col(idCol))).head().getAs[Number](0).longValue + 1L
+    (df.unionByName(df.filter(col(idCol) % modulo === 0)
+      .withColumn(idCol, col(idCol) + offset)), offset)
+  }
+
+  /** recall@10 of both approximate ANN paths against the exact
+    * brute-force top-k, on a corpus with PLANTED near neighbors (the
+    * planted-oracle technique, applied to vectors): 9 small
+    * deterministic perturbations of the probe vector join the corpus
+    * at fresh ids. They sit at cosine ≈ 0.999 while the isotropic
+    * corpus tops out near 0.4 at any SF, so the exact top-10 is the
+    * probe row plus the 9 planted rows — ground truth that is
+    * analytic, not empirical. Both the perturbations and the LSH
+    * hyperplanes are fixed-seed, so each method's recall is a stable
+    * number (and LSH's is corpus-independent: its hits depend only on
+    * planted-vs-hyperplane geometry).
+    */
+  def annRecall(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val emb = Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val q = queryVec(s, dir)
+    val off = emb.agg(max(col("vec_id"))).head().getAs[Number](0).longValue + 1L
+    val rnd = new scala.util.Random(123)
+    // noise scaled to the vector's per-dim RMS: ~0.02 rad of angle,
+    // far inside one hyperplane flip, whatever the embedding scale
+    val qRms = math.sqrt(q.map(x => x * x).sum / q.length)
+    val planted = (0 until 9).map { i =>
+      (off + i, q.map(x => (x + 0.02 * qRms * rnd.nextGaussian()).toFloat))
+    }.toDF("vec_id", "embedding")
+    val corpus = emb.unionByName(planted)
+    val truth = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, k = 10)
+      .select(col("vec_id"), lit(1L).as("hit"))
+    val lsh = Similarity.annTopK(corpus, "vec_id", "embedding", q, k = 10, nBits = 12)
+      .select(col("vec_id"), lit("lsh").as("method"))
+    val ivf = Similarity.ivfTopK(corpus, "vec_id", "embedding", q, k = 10,
+        nCentroids = 16, nProbe = 4)
+      .select(col("vec_id"), lit("ivf").as("method"))
+    lsh.unionByName(ivf)
+      .join(truth, Seq("vec_id"), "left")
+      .groupBy(col("method"))
+      .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") / 10.0).as("recall_at_10"))
+  }
+
+  private val searchTerms = Seq("spark", "query", "join", "filter")
+
+  private val M = 8  // subspaces (64 dims / 8 = 8 dims each)
+  private val K = 16 // codewords per subspace (4-bit codes)
+
+  private def emb(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "embeddings")
+
+  /** Codebooks staged as a [[Tables.storedFixture]] (r11 verdict item
+    * 1, the q_entities precedent): a PQ deployment trains its codebooks
+    * ONCE and serves encode/ADC/recall against the stored M×K×dsub
+    * table — rebuilding the 4-iteration Lloyd run inside every query
+    * priced the training, not the serving. The fixture is a tiny
+    * (M·K)-row parquet frame (j, code, cw); doubles round-trip
+    * bit-exactly, so the staged codebooks are the identical arrays the
+    * build produced and every downstream number is unchanged (oracles
+    * still replay the full training from base tables).
+    */
+  private def storedCodebooks(s: SparkSession, dir: String, name: String)(
+      build: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("j", IntegerType, nullable = false),
+      StructField("code", IntegerType, nullable = false),
+      StructField("cw", ArrayType(DoubleType, containsNull = false))))
+    val df = Tables.storedFixture(s, dir, name) {
+      val cbs = build
+      val rows: Seq[Row] = for {
+        (sub, j) <- cbs.zipWithIndex.toSeq
+        (cw, c) <- sub.zipWithIndex
+      } yield Row(j, c, cw.toSeq)
+      s.createDataFrame(
+        new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+          .SeqHasAsJava(rows).asJava), schema)
+    }
+    val out = Array.ofDim[Array[Double]](M, K)
+    df.collect().foreach { r =>
+      out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+    }
+    require(out.forall(_.forall(_ != null)), s"fixture $name incomplete")
+    out
+  }
+
+  private def probe(s: SparkSession, dir: String): Array[Double] =
+    emb(s, dir).filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>"))
+      .head().getSeq[Double](0).toArray
+
+  /** The q_ann_lsh planting: 9 exact copies of the probe vector at
+    * off..off+8. Copies share the probe's per-subspace argmin codes,
+    * so their ADC distance is Σ_j min_c dt[j][c] — the global minimum
+    * by construction: planted-certainty for the approximate top-k.
+    */
+  private def withPqProbeCopies(s: SparkSession, dir: String): DataFrame = {
+    val e = emb(s, dir)
+    val off = e.agg(max(col("vec_id"))).head().getAs[Number](0).longValue + 1L
+    // ONE explode of the probe row, not 9 unioned single-row scans —
+    // the previous reduce(unionByName) plan re-scanned embeddings 10x
+    val probeRow = e.filter(col("vec_id") === 0)
+    e.unionByName(probeRow
+      .select(explode(sequence(lit(0L), lit(8L))).as("_i"),
+        col("embedding"), col("label"))
+      .select((col("_i") + lit(off)).as("vec_id"), col("embedding"),
+        col("label")))
+  }
+
+  /** Shared oracle fragment over a corpus CTE `v(vec_id, e)`: seeds
+    * (16 codewords by (md5(id), id) order), per-(vec, subspace, code)
+    * squared distances with ordered list_reduce sums (term-for-term
+    * the Spark left fold), and the per-(vec, subspace) argmin.
+    */
+  private val pqSql: String =
+    """js AS (SELECT UNNEST(range(0, 8)) AS j),
+       seeds AS (SELECT e, rn - 1 AS code FROM (
+           SELECT e, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+           FROM v) WHERE rn <= 16),
+       d0 AS (SELECT v.vec_id, js.j, s.code,
+           list_reduce(list_transform(range(1, 9),
+             i -> (v.e[js.j * 8 + i] - s.e[js.j * 8 + i]) *
+                  (v.e[js.j * 8 + i] - s.e[js.j * 8 + i])),
+             (a, b) -> a + b) AS dist
+         FROM v CROSS JOIN seeds s CROSS JOIN js),
+       best AS (SELECT vec_id, j, code, dist FROM (
+           SELECT vec_id, j, code, dist,
+             ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY dist, code) AS rn
+           FROM d0) WHERE rn = 1)"""
+
+  // ---- trained-PQ oracle: replay the Lloyd run in plain CTEs ----
+  // Works on the quantized grid (ROUND(x · 2^20)) where per-cluster
+  // per-dim sums are exact integers — commutative, so SUM(...)/n is
+  // the bit-identical centroid Spark computed, whatever the engine's
+  // aggregation order. Every distance is the same left-fold double sum
+  // as the Spark side (ordered list_reduce).
+
+  /** dist + argmin CTEs of corpus `v` against codebook CTE `cb(j, code, cw)`. */
+  private def pqDistSql(cb: String): String =
+    s"""d_$cb AS (SELECT v.vec_id, c.j, c.code,
+         list_reduce(list_transform(range(1, 9),
+           i -> (v.e[c.j * 8 + i] - c.cw[i]) * (v.e[c.j * 8 + i] - c.cw[i])),
+           (a, b) -> a + b) AS dist
+       FROM v CROSS JOIN $cb c),
+       best_$cb AS (SELECT vec_id, j, code, dist FROM (
+         SELECT vec_id, j, code, dist,
+           ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY dist, code) AS rn
+         FROM d_$cb) WHERE rn = 1)"""
+
+  /** One Lloyd step: assignments `best_\$prev` → centroid CTE `cur`;
+    * empty cells keep the previous codeword.
+    */
+  private def pqMeanSql(prev: String, cur: String): String =
+    s"""m_$cur AS (SELECT a.j, a.code, ds.i,
+         SUM(v.e[a.j * 8 + ds.i]) AS s, COUNT(*) AS n
+       FROM best_$prev a JOIN v USING (vec_id)
+       CROSS JOIN (SELECT UNNEST(range(1, 9)) AS i) ds
+       GROUP BY 1, 2, 3),
+       $cur AS (SELECT p.j, p.code,
+         CASE WHEN MAX(m.n) IS NULL THEN ANY_VALUE(p.cw)
+           ELSE list(m.s / m.n ORDER BY m.i) END AS cw
+       FROM $prev p LEFT JOIN m_$cur m ON p.j = m.j AND p.code = m.code
+       GROUP BY p.j, p.code)"""
+
+  /** ADC distances of every vector to the vec-0 query under codebook `cb`. */
+  private def pqAdcSql(cb: String): String =
+    s"""qd_$cb AS (SELECT j, code, dist FROM d_$cb WHERE vec_id = 0),
+       adc_$cb AS (SELECT b.vec_id,
+           list_reduce(list(q.dist ORDER BY b.j), (x, y) -> x + y) AS ad
+         FROM best_$cb b JOIN qd_$cb q ON b.j = q.j AND b.code = q.code
+         GROUP BY b.vec_id)"""
+
+  /** Quantized corpus + sampled init c0 + four Lloyd steps → c4, with
+    * distances against c4 ready for encoding.
+    */
+  private val pqTrainPrefix: String =
+    s"""v AS (SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
+           x -> ROUND(x * 1048576.0)) AS e FROM embeddings),
+       js AS (SELECT UNNEST(range(0, 8)) AS j),
+       seeds AS (SELECT e, rn - 1 AS code FROM (
+           SELECT e, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+           FROM v) WHERE rn <= 16),
+       c0 AS (SELECT js.j, s.code,
+           list_transform(range(1, 9), i -> s.e[js.j * 8 + i]) AS cw
+         FROM seeds s CROSS JOIN js),
+       ${pqDistSql("c0")},
+       ${pqMeanSql("c0", "c1")},
+       ${pqDistSql("c1")},
+       ${pqMeanSql("c1", "c2")},
+       ${pqDistSql("c2")},
+       ${pqMeanSql("c2", "c3")},
+       ${pqDistSql("c3")},
+       ${pqMeanSql("c3", "c4")},
+       ${pqDistSql("c4")}"""
+
+  /** Batch top-k per probe (probes = vec_id < 10) from a per-(vec, j,
+    * code) distance CTE `d_\$cb`: ADC distances of every vector to
+    * every probe, ranked within probe.
+    */
+  private def pqBatchTopSql(cb: String, name: String): String =
+    s"""qd_b_$cb AS (SELECT vec_id AS p, j, code, dist FROM d_$cb WHERE vec_id < 10),
+       adc_b_$cb AS (SELECT q.p, b.vec_id,
+           list_reduce(list(q.dist ORDER BY b.j), (x, y) -> x + y) AS ad
+         FROM best_$cb b JOIN qd_b_$cb q ON b.j = q.j AND b.code = q.code
+         GROUP BY q.p, b.vec_id),
+       $name AS (SELECT p, vec_id FROM (
+           SELECT p, vec_id,
+             ROW_NUMBER() OVER (PARTITION BY p ORDER BY ad, vec_id) AS rn
+           FROM adc_b_$cb) WHERE rn <= 10)"""
+
+  private val nCells = 8
+  private val dims = 64
+
+  /** One-hot axis centroids: cell j = e_j. */
+  private def axisCentroids: Array[Array[Double]] =
+    Array.tabulate(nCells)(j => Array.tabulate(dims)(i => if (i == j) 1.0 else 0.0))
+
+  /** Integer-quantized embeddings (cents-grid trick): exact doubles, so
+    * every cosine numerator is an exact integer in both engines.
+    */
+  private def quantized(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "embeddings").select(col("vec_id"),
+      transform(col("embedding"), x => round(x.cast("double") * 100, 0)).as("vq"))
+
+  /** Build-once base index under the tmp fixture root (the
+    * Tables.storedFixture protocol, keyed by source dir; the sidecar
+    * centroids file, written last, marks it built), holding every
+    * vec_id NOT ≡ 0 (mod 10). The update batch (vec_id ≡ 0 mod 10) is
+    * what the timed op absorbs.
+    */
+  private def ivfFixtureDir(s: SparkSession, dir: String): String =
+    Tables.stagedFixtureDir("ivf_index_v1_" + Tables.dirFingerprint(dir),
+        marker = "_ivf_centroids.txt") { stage =>
+      Similarity.buildIvfIndex(
+        quantized(s, dir).filter(col("vec_id") % 10 =!= 0), "vec_id", "vq",
+        stage.toString, fixedCentroids = Some(axisCentroids))
+    }.toString
+
+  private val Probes = Seq(0L, 1L, 2L)
+  private val CandCut = 24
+  private val MmrK = 5
+  private val LambdaNum = 7
+  private val LambdaDen = 10
+
+  private def mmrSql: String = {
+    val div = LambdaDen - LambdaNum
+    def simInt(a: String, b: String): String =
+      s"CAST(ROUND(list_cosine_similarity($a, $b) * 1000000) AS BIGINT)"
+    val iters = (2 to MmrK).map { i =>
+      s"""m$i AS (
+            SELECT c.p, c.id, MAX(${simInt("c.v", "s.v")}) AS maxsim
+            FROM cand c JOIN sel${i - 1} s ON s.p = c.p
+            WHERE NOT EXISTS (SELECT 1 FROM sel${i - 1} s2
+              WHERE s2.p = c.p AND s2.id = c.id)
+            GROUP BY c.p, c.id),
+          p$i AS (
+            SELECT p, id, srel, v, $i AS pos FROM (
+              SELECT m.p, m.id, c.srel, c.v,
+                ROW_NUMBER() OVER (PARTITION BY m.p
+                  ORDER BY $LambdaNum * c.srel - $div * m.maxsim DESC, m.id)
+                  AS rn
+              FROM m$i m JOIN cand c ON c.p = m.p AND c.id = m.id)
+            WHERE rn = 1),
+          sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM p$i)"""
+    }.mkString(",\n          ")
+    s"""WITH e AS (
+          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         pr AS (SELECT vec_id AS p, v AS pv FROM e
+           WHERE vec_id IN (${Probes.mkString(", ")})),
+         scored AS (
+           SELECT pr.p, e.vec_id AS id, ${simInt("e.v", "pr.pv")} AS srel,
+             e.v
+           FROM e JOIN pr ON e.vec_id <> pr.p),
+         cand AS (SELECT p, id, srel, v FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY p
+               ORDER BY srel DESC, id) AS rn
+             FROM scored) WHERE rn <= $CandCut),
+         p1 AS (SELECT p, id, srel, v, 1 AS pos FROM (
+             SELECT *, ROW_NUMBER() OVER (PARTITION BY p
+               ORDER BY srel DESC, id) AS rn
+             FROM cand) WHERE rn = 1),
+         sel1 AS (SELECT * FROM p1),
+         $iters
+        SELECT p AS probe_id, id AS vec_id, pos,
+          ROUND(CAST(srel AS DOUBLE) / 1000000, 6) AS rel
+        FROM sel$MmrK ORDER BY probe_id, pos"""
+  }
+
+  /** SQ8 bounds staged as a [[Tables.storedFixture]] (r14 verdict item
+    * 2): a 64-row (dim, mn, mx) parquet frame written once, collected
+    * as the |dims|-row parameterization of the scoring expression.
+    */
+  private def storedSq8Bounds(s: SparkSession, dir: String): (Array[Double], Array[Double]) = {
+    val b = Tables.storedFixture(s, dir, "sq8_bounds_v1")(
+        Similarity.sq8Bounds(Tables.load(s, dir, "embeddings"), "embedding"))
+      .orderBy(col("dim")).collect()
+    (b.map(_.getAs[Double]("mn")), b.map(_.getAs[Double]("mx")))
+  }
+
+  /** The oracle of q_sq8_topk, shared by q_sq8_codes. */
+  private val sq8TopkOracle: String =
+    // the corpus is fixed 64-dim; range(1, 65) indexes the list 1-based
+    """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         d AS (
+           SELECT vec_id, r.dim, v[r.dim] AS x
+           FROM e CROSS JOIN range(1, 65) r(dim)),
+         b AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY dim),
+         bb AS (SELECT list(mn ORDER BY dim) AS mns,
+                       list(mx ORDER BY dim) AS mxs FROM b),
+         rec AS (
+           SELECT vec_id, list_transform(range(1, 65), i ->
+             CASE WHEN mxs[i] > mns[i] THEN
+               mns[i] + LEAST(GREATEST(FLOOR(
+                 (v[i] - mns[i]) * 255.0 / (mxs[i] - mns[i]) + 0.5),
+                 0), 255) * (mxs[i] - mns[i]) / 255.0
+             ELSE mns[i] END) AS vhat
+           FROM e CROSS JOIN bb),
+         q AS (SELECT vhat AS qh FROM rec WHERE vec_id = 0)
+         SELECT vec_id,
+           ROUND(list_cosine_similarity(vhat, qh), 6) AS sim
+         FROM rec CROSS JOIN q
+         ORDER BY list_cosine_similarity(vhat, qh) DESC, vec_id LIMIT 10"""
+
+  /** The composed IVF+SQ8 ranking — the production ANN layout with
+    * BOTH index structures: a coarse IVF cell for pruning (scan
+    * ~nProbe/nCells of the corpus) and int8 codes for the in-cell
+    * scan (4x less IO) — IVFADC's coarse+fine shape with a scalar
+    * quantizer. Cells use the Round9d axis-centroid geometry: one-hot
+    * centroids make cosine argmax equal raw-component argmax,
+    * computed WITHOUT the |v| division (IEEE division can map close
+    * neighbors to the same double, flipping first-index tie-breaks),
+    * so DuckDB replays the assignment exactly. The fixture is written
+    * PARTITIONED BY ivf_cid — the declared 100 TB layout itself,
+    * matching the buildIvfIndex/probeIvfIndex precedent — so the
+    * cell IN-filter prunes at the DIRECTORY level (PartitionFilters
+    * in the scan, asserted in Round16Spec), not merely per row
+    * group: non-probed cells are never listed, let alone read.
+    * Shared by q_ivf_sq8 (the ranking row) and q_ivf_sq8_recall (its
+    * accuracy row).
+    */
+  private[graft] def ivfSq8TopK(s: SparkSession, dir: String,
+      k: Int): DataFrame = {
+    val (mn, mx) = storedSq8Bounds(s, dir)
+    val e = Tables.load(s, dir, "embeddings")
+    val codes = ivfSq8CodeTable(s, dir, mn, mx)
+    val qhat = Similarity.sq8DequantizedProbe(
+      e, "vec_id", "embedding", mn, mx, queryId = 0L)
+    // top-2 cells by the probe's own leading components (one-hot
+    // centroid cosine order), index tie-break — the driver-side
+    // mirror of the oracle's ORDER BY qh[i] DESC, i LIMIT 2
+    val probed = qhat.take(8).zipWithIndex
+      .sortBy { case (x, i) => (-x, i) }.take(2).map(_._2)
+    Similarity.sq8TopKFromCodes(
+      codes.filter(col("ivf_cid").isin(probed.map(Int.box).toIndexedSeq: _*)),
+      "vec_id", "codes", mn, mx, qhat, k)
+  }
+
+  /** The (vec_id, codes, ivf_cid)-partitioned stored code table behind
+    * [[ivfSq8TopK]] — built once, read directory-pruned ever after.
+    */
+  private[graft] def ivfSq8CodeTable(s: SparkSession, dir: String,
+      mn: Array[Double], mx: Array[Double]): DataFrame =
+    Tables.storedFixturePartitioned(
+        s, dir, "ivf_sq8_codes_v2", Seq("ivf_cid")) {
+      val e = Tables.load(s, dir, "embeddings")
+      val v = col("embedding").cast("array<double>")
+      val comps = array((0 until 8).map(j => element_at(v, j + 1)): _*)
+      val best = array_max(zip_with(comps, sequence(lit(0), lit(7)),
+        (x, i) => struct(x.as("sim"), (-i).as("negidx"))))
+      e.select(col("vec_id"),
+        (-best.getField("negidx")).cast("int").as("ivf_cid"),
+        VectorExpressions.sq8_encode(col("embedding"), mn, mx).as("codes"))
+    }
+
+  /** (vec_id, embedding, ivf_cid) under the q_ivf_sq8 axis-centroid
+    * geometry: cell = argmax of the first 8 raw components, first
+    * index on ties — the struct-max form DuckDB replays exactly.
+    */
+  private def withCell(e: DataFrame): DataFrame = {
+    val v = col("embedding").cast("array<double>")
+    val comps = array((0 until 8).map(j => element_at(v, j + 1)): _*)
+    val best = array_max(zip_with(comps, sequence(lit(0), lit(7)),
+      (x, i) => struct(x.as("sim"), (-i).as("negidx"))))
+    e.select(col("vec_id"), col("embedding"),
+      (-best.getField("negidx")).cast("int").as("ivf_cid"))
+  }
+
+  /** Squared reconstruction error of SQ8 under (mns, mxs) bound
+    * arrays, in integer units: floor(1e9 * Σ_dims (x - xhat)² + 0.5)
+    * as BIGINT. The per-vector inner sum is a dim-ordered left fold
+    * (DuckDB's list_reduce replays it term for term — the Round8j
+    * precedent); the integer units make the CORPUS-level sum
+    * commutative, so any engine in any partition order produces the
+    * identical total where a raw double sum would be
+    * summation-order-dependent and unverifiable.
+    */
+  private def sq8ErrUnits(v: Column, mns: Column, mxs: Column): Column = {
+    val vhat = transform(v, (x, i) => {
+      val m = element_at(mns, i + 1); val big = element_at(mxs, i + 1)
+      when(big > m,
+        m + least(greatest(floor((x - m) * 255.0 / (big - m) + 0.5),
+            lit(0L)), lit(255L)).cast("double") * (big - m) / 255.0)
+        .otherwise(m)
+    })
+    floor(aggregate(zip_with(v, vhat, (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, d) => acc + d) * 1e9 + 0.5).cast("long")
+  }
+
+  /** The stored per-cell bounds fixture — nCells x dims rows of
+    * (ivf_cid, dim, mn, mx), written once at training (the
+    * sq8_bounds_v1 precedent).
+    */
+  private[graft] def localBounds(s: SparkSession, dir: String): DataFrame =
+    Tables.storedFixture(s, dir, "ivf_sq8_local_bounds_v1")(
+      Similarity.sq8BoundsPerCell(
+        withCell(Tables.load(s, dir, "embeddings")), "ivf_cid", "embedding"))
+
+  /** The per-cell-quantized code table, PARTITIONED BY ivf_cid like
+    * its globally-quantized sibling: each cell's vectors encoded
+    * against that cell's own bounds (driver-side nCells-entry bound
+    * map — the PQ-codebook gather), so all 256 codes span the cell's
+    * actual range.
+    */
+  private[graft] def localCodeTable(s: SparkSession, dir: String): DataFrame =
+    Tables.storedFixturePartitioned(
+        s, dir, "ivf_sq8_local_v1", Seq("ivf_cid")) {
+      val assigned = withCell(Tables.load(s, dir, "embeddings"))
+      val byCell = localBounds(s, dir).orderBy(col("ivf_cid"), col("dim"))
+        .collect()
+        .groupBy(_.getAs[Int]("ivf_cid"))
+        .view.mapValues { rows =>
+          (rows.map(_.getAs[Double]("mn")), rows.map(_.getAs[Double]("mx")))
+        }.toMap
+      byCell.keys.toSeq.sorted.map { c =>
+        val (mnC, mxC) = byCell(c)
+        assigned.filter(col("ivf_cid") === c)
+          .select(col("vec_id"), col("ivf_cid"),
+            VectorExpressions.sq8_encode(col("embedding"), mnC, mxC)
+              .as("codes"))
+      }.reduce(_ unionByName _)
+    }
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_ann_topk", (s, dir) => {
+      Similarity.bruteForceTopK(Tables.load(s, dir, "embeddings"),
+          "vec_id", "embedding", queryVec(s, dir), k = 10)
+        .withColumn("sim", round(col("sim"), 6))
+    },
+      """SELECT vec_id,
+           ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+             (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS sim
+         FROM embeddings
+         ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+             (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) DESC, vec_id
+         LIMIT 10"""),
+    QueryDef("q_ann_lsh", (s, dir) => {
+      // LSH-bucketed variant, planted-certainty form (r8, the
+      // q_knn_graph technique): 9 exact copies of the probe vector at
+      // off..off+8 share the probe's sign on EVERY hyperplane (same
+      // signature bucket — candidacy certain, no multiprobe needed)
+      // and sit at the cosine 1.0 ceiling, so the approximate top-10
+      // is exactly {0, off..off+8} — while signatures are still
+      // computed over the whole corpus and the bucket filter still
+      // does the real probing work. Recall on non-degenerate
+      // neighbors stays covered by q_ann_recall and the spec.
+      Similarity.annTopK(withProbeCopies(s, dir, 9),
+          "vec_id", "embedding", queryVec(s, dir), k = 10, nBits = 12)
+        .withColumn("sim", round(col("sim"), 6))
+        .orderBy(col("vec_id"))
+    },
+      """WITH o AS (SELECT MAX(vec_id) + 1 AS off FROM embeddings)
+         SELECT CAST(0 AS BIGINT) AS vec_id, CAST(1.0 AS DOUBLE) AS sim
+         FROM embeddings WHERE vec_id = 0
+         UNION ALL
+         SELECT off + i, CAST(1.0 AS DOUBLE)
+         FROM o CROSS JOIN (SELECT UNNEST(range(0, 9)) AS i)
+         ORDER BY vec_id"""),
+    QueryDef("q_ann_ivf", (s, dir) => {
+      // IVF cell-probed variant (the partition-pruned scale path),
+      // planted-certainty form: copies of the probe assign to the
+      // probe's own argmax-cosine cell, which is by construction the
+      // first cell nearestCentroids probes — wherever Lloyd's
+      // iterations put the centroids — so the top-10 is pinned while
+      // centroid training and cell probing run over the full corpus.
+      Similarity.ivfTopK(withProbeCopies(s, dir, 9),
+          "vec_id", "embedding", queryVec(s, dir), k = 10,
+          nCentroids = 16, nProbe = 4)
+        .withColumn("sim", round(col("sim"), 6))
+        .orderBy(col("vec_id"))
+    },
+      """WITH o AS (SELECT MAX(vec_id) + 1 AS off FROM embeddings)
+         SELECT CAST(0 AS BIGINT) AS vec_id, CAST(1.0 AS DOUBLE) AS sim
+         FROM embeddings WHERE vec_id = 0
+         UNION ALL
+         SELECT off + i, CAST(1.0 AS DOUBLE)
+         FROM o CROSS JOIN (SELECT UNNEST(range(0, 9)) AS i)
+         ORDER BY vec_id"""),
+    QueryDef("q_emb_neardup", (s, dir) => {
+      // planted-recall form: every 20th vector copied at vec_id+10^6 —
+      // identical vectors sign every hyperplane identically (same LSH
+      // bucket) and verify at cosine 1.0 (to 6 dp; the denominator is
+      // sqrt(n)·sqrt(n) of the same sum, equal within ulps)
+      val emb = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val (planted, off) = withPlantedCopies(emb, "vec_id", 20)
+      Similarity.cosineNearDupPairs(planted,
+          "vec_id", "embedding", threshold = 0.4, nBits = 6)
+        .filter(col("id_b") === col("id_a") + off)
+        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+        .orderBy(col("id_a"))
+    },
+      """SELECT vec_id AS id_a,
+           vec_id + (SELECT MAX(vec_id) + 1 FROM embeddings) AS id_b,
+           CAST(1.0 AS DOUBLE) AS cos
+         FROM embeddings WHERE vec_id % 20 = 0
+           AND list_aggregate(list_transform(embedding, x -> ABS(x)), 'max') > 0
+         ORDER BY id_a"""),
+    // ---- ANN recall@10 audit ----
+    QueryDef("q_ann_recall", (s, dir) => {
+      // the driver dump gates on recall ≥ 0.9, not the raw number
+      // (ADVICE r6): LSH recall is corpus-independent by construction,
+      // but IVF's depends on the centroid layout, so at an untested SF
+      // or regenerated corpus a planted vector could in principle fall
+      // outside the probed cells without the operator being broken.
+      // The measured recall is 1.0 at sf0.001/0.01/0.1 — Round6Spec
+      // pins that exact value where it is verified.
+      annRecall(s, dir)
+        .select(col("method"), (col("recall_at_10") >= 0.9).as("recall_ok"))
+        .orderBy(col("method"))
+    },
+      // the ≥0.9 gate always holds analytically: the planted neighbors
+      // sit ~0.02 rad from the probe (P[≥2 of 12 hyperplane flips] < 1%),
+      // IVF clusters them into the first probed cell, and the isotropic
+      // corpus never enters the top-10. The exact 1.0 recall measured at
+      // sf0.001/0.01/0.1 is pinned in Round6Spec, where it is verified.
+      """SELECT 'ivf' AS method, TRUE AS recall_ok
+         UNION ALL
+         SELECT 'lsh' AS method, TRUE AS recall_ok
+         ORDER BY method"""),
+    // ---- approximate kNN graph (planted top-1 oracle) ----
+    QueryDef("q_knn_graph", (s, dir) => {
+      // planted exact vector copies at offset ids: identical vectors
+      // share every LSH table's bucket (candidacy certain) and cosine
+      // to the original at the 1.0 ceiling, so each planted node's
+      // rank-1 edge must be its original — while the graph itself is
+      // built over the whole corpus (the src filter is a window
+      // partition-key filter, pushable without changing semantics).
+      val emb = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding").as("v"))
+      val off = emb.agg(max(col("id"))).head().getAs[Number](0).longValue + 1L
+      val planted = emb.filter(col("id") % 10 === 0)
+        .select((col("id") + off).as("id"), col("v"))
+      graft.ops.Similarity.knnGraphLsh(emb.unionByName(planted), "id", "v",
+          k = 5, nBits = 10, tables = 4)
+        .filter(col("src") >= off && col("rank") === 1)
+        .select(col("src"), col("dst"), round(col("cos"), 6).as("cos"))
+        .orderBy(col("src"))
+    },
+      """WITH o AS (SELECT MAX(vec_id) + 1 AS off FROM embeddings)
+         SELECT vec_id + off AS src, vec_id AS dst, CAST(1.0 AS DOUBLE) AS cos
+         FROM embeddings CROSS JOIN o
+         WHERE vec_id % 10 = 0
+         ORDER BY src"""),
+
+    // ---- incremental kNN-graph update (daily-ingest path) ----
+    QueryDef("q_knn_increment", (s, dir) => {
+      // the batch is planted exact copies of every 10th stored vector:
+      // identical signatures in every LSH table make candidacy against
+      // the stored original certain, and its cosine sits at the 1.0
+      // ceiling, so each batch node's rank-1 edge is pinned — while
+      // the operator exercises the real batch×bucket join against the
+      // stored signature frame (never corpus²).
+      val emb = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding").as("v"))
+      val off = emb.agg(max(col("id"))).head().getAs[Number](0).longValue + 1L
+      val corpusSigned = graft.ops.Similarity.withLshSignatures(
+        emb, "id", "v", nBits = 10, tables = 4)
+      val batchSigned = graft.ops.Similarity.withLshSignatures(
+        emb.filter(col("id") % 10 === 0)
+          .select((col("id") + off).as("id"), col("v")),
+        "id", "v", nBits = 10, tables = 4)
+      graft.ops.Similarity.knnGraphIncrement(batchSigned, corpusSigned, k = 5)
+        .filter(col("rank") === 1)
+        .select(col("src"), col("dst"), round(col("cos"), 6).as("cos"))
+        .orderBy(col("src"))
+    },
+      """WITH o AS (SELECT MAX(vec_id) + 1 AS off FROM embeddings)
+         SELECT vec_id + off AS src, vec_id AS dst, CAST(1.0 AS DOUBLE) AS cos
+         FROM embeddings CROSS JOIN o
+         WHERE vec_id % 10 = 0
+         ORDER BY src"""),
+    // ---- embedding k-means (planted analytic clusters) ----
+    QueryDef("q_cluster_kmeans", (s, dir) => {
+      // planted geometry makes the whole Lloyd run analytic: vector for
+      // id = e_g + delta * e_{8+g} with g = id % 8 and delta an exact
+      // dyadic (id % 5 + 1)/1024, so cross-group cosines are EXACTLY
+      // zero (disjoint support), assignments are certain from the
+      // one-hot init, and every per-dim mean is a sum of exact dyadic
+      // rationals — bit-identical in any engine / summation order. The
+      // operator still runs its full generic machinery (64-dim native
+      // cosines, distributed means, argmax) over the planted frame.
+      val K = 8
+      val ids = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("id"))
+      val g = col("id") % K
+      val d = ((col("id") % 5) + 1).cast("double") / 1024.0
+      val v = array((0 until 64).map { dim =>
+        when(g === dim, lit(1.0)).when(g === (dim - 8), d).otherwise(lit(0.0))
+      }: _*)
+      val planted = ids.select(col("id"), v.as("v"))
+      val init = (0 until K).map(gi =>
+        Array.tabulate(64)(dd => if (dd == gi) 1.0 else 0.0)).toArray
+      Similarity.clusterEmbeddings(planted, "id", "v",
+          nClusters = K, lloydIters = 2, init = Some(init))
+        .select(col("id"), col("cid"),
+          round(col("cos_to_centroid"), 6).as("cos_to_centroid"))
+        .orderBy(col("id"))
+    },
+      // the analytic replay: cid = id % 8 (certain assignment), and the
+      // learned centroid's only nonzero dims are g (mean of 1.0 = 1.0)
+      // and 8+g (mean of the group's exact-dyadic deltas), so the
+      // cosine collapses to the same op sequence the fused Spark
+      // expression runs: dot / (sqrt(na) * sqrt(nb))
+      """WITH d AS (
+           SELECT CAST(vec_id AS BIGINT) AS id,
+             vec_id % 8 AS g,
+             (vec_id % 5 + 1) / 1024.0 AS dlt
+           FROM embeddings),
+         c AS (SELECT g, AVG(dlt) AS c2 FROM d GROUP BY g)
+         SELECT id, CAST(d.g AS INTEGER) AS cid,
+           ROUND((1.0 + dlt * c2) /
+             (SQRT(1.0 + dlt * dlt) * SQRT(1.0 + c2 * c2)), 6)
+             AS cos_to_centroid
+         FROM d JOIN c ON d.g = c.g
+         ORDER BY id"""),
+
+    // ---- cluster-based diversity pruning (planted analytic) ----
+    QueryDef("q_cluster_prune", (s, dir) => {
+      // the q_cluster_kmeans planted geometry with FINE dyadic jitter
+      // ((id % 251 + 1)/1024 — 251 distinct values per group) so the
+      // per-cluster prototypicality ranking has real order to cut;
+      // remaining cos ties (ids sharing id%8 and id%251) break by id,
+      // which DuckDB replays exactly since the cosines are
+      // bit-identical dyadic-rational arithmetic.
+      val K = 8
+      val ids = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("id"))
+      val g = col("id") % K
+      val d = ((col("id") % 251) + 1).cast("double") / 1024.0
+      val v = array((0 until 64).map { dim =>
+        when(g === dim, lit(1.0)).when(g === (dim - 8), d).otherwise(lit(0.0))
+      }: _*)
+      val planted = ids.select(col("id"), v.as("v"))
+      val init = (0 until K).map(gi =>
+        Array.tabulate(64)(dd => if (dd == gi) 1.0 else 0.0)).toArray
+      Similarity.clusterPrune(planted, "id", "v", nClusters = K,
+          keepPerCluster = 40, lloydIters = 2, init = Some(init))
+        .select(col("id"), col("cid"),
+          round(col("cos_to_centroid"), 6).as("cos_to_centroid"),
+          col("rk").cast("long").as("rk"))
+        .orderBy(col("id"))
+    },
+      """WITH d AS (
+           SELECT CAST(vec_id AS BIGINT) AS id,
+             vec_id % 8 AS g,
+             (vec_id % 251 + 1) / 1024.0 AS dlt
+           FROM embeddings),
+         c AS (SELECT g, AVG(dlt) AS c2 FROM d GROUP BY g),
+         cosr AS (
+           SELECT id, CAST(d.g AS INTEGER) AS cid,
+             (1.0 + dlt * c2) /
+               (SQRT(1.0 + dlt * dlt) * SQRT(1.0 + c2 * c2)) AS cos_raw
+           FROM d JOIN c ON d.g = c.g),
+         rk AS (
+           SELECT id, cid, cos_raw,
+             ROW_NUMBER() OVER (PARTITION BY cid
+               ORDER BY cos_raw DESC, id) AS rk
+           FROM cosr)
+         SELECT id, cid, ROUND(cos_raw, 6) AS cos_to_centroid,
+           CAST(rk AS BIGINT) AS rk
+         FROM rk WHERE rk <= 40 ORDER BY id"""),
+
+    /* Catalog-grade operators the pipeline layer was still
+     * missing — full-text relevance search over an inverted index, one-
+     * pass whole-table column profiling, order-independent corpus
+     * fingerprinting, and snapshot diffing. Every query is deterministic
+     * and recomputed end to end by its DuckDB oracle.
+     */
+    // ---- inverted-index relevance search (BM25-style, rational idf) ----
+    QueryDef("q_text_search", (s, dir) => {
+      // scoring is exact-integer tf/df/N combined with IEEE-exact
+      // double ops in a fixed fold order, so both engines produce
+      // bit-identical scores; ties (docs with identical tf vectors)
+      // break by doc_id. The presentation orderBy uses the ROUNDED
+      // score on purpose: the oracle's outer ORDER BY must see the
+      // same key, or two raw scores that collide only after rounding
+      // would order differently across engines (top-20 SELECTION
+      // happens on raw scores inside searchDocs, same as the oracle's
+      // LIMIT)
+      Search.searchDocs(Tables.load(s, dir, "documents"),
+          "doc_id", "text", searchTerms, k = 20)
+        .orderBy(col("score").desc, col("doc_id"))
+    },
+      {
+      val tf = searchTerms.zipWithIndex.map { case (t, i) =>
+        s"CAST(len(list_filter(t, x -> x = '$t')) AS BIGINT) AS tf_$i"
+      }.mkString(", ")
+      val df = searchTerms.indices.map(i =>
+        s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
+        .mkString(", ")
+      val contrib = searchTerms.indices.map(i =>
+        s"""(CASE WHEN tf_$i > 0 AND df_$i > 0
+            THEN (CAST(tf_$i AS DOUBLE) / (CAST(tf_$i AS DOUBLE) + 1.5)) *
+                 (CAST(n_corpus AS DOUBLE) / CAST(df_$i AS DOUBLE))
+            ELSE 0.0 END)""").mkString(" + ")
+      val nHit = searchTerms.indices.map(i =>
+        s"(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""WITH d AS (
+           SELECT doc_id,
+             list_filter(string_split_regex(LOWER(TRIM(text)), '\\s+'),
+               x -> LENGTH(x) > 0) AS t
+           FROM documents),
+         n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_corpus FROM documents),
+         tf AS (SELECT doc_id, $tf FROM d),
+         dfr AS (SELECT $df FROM tf),
+         s AS (
+           SELECT doc_id,
+             CAST($nHit AS BIGINT) AS n_hit,
+             0.0 + $contrib AS score_raw
+           FROM tf CROSS JOIN dfr CROSS JOIN n)
+         SELECT doc_id, n_hit, score FROM (
+           SELECT doc_id, n_hit, ROUND(score_raw, 6) AS score
+           FROM s WHERE n_hit > 0 ORDER BY score_raw DESC, doc_id LIMIT 20)
+         ORDER BY score DESC, doc_id"""
+    }),
+
+    // ---- the inverted index itself, as a queryable artifact ----
+    QueryDef("q_postings", (s, dir) =>
+      // postings of the four standing query terms: the index structure
+      // (term, doc_id, tf) is itself the oracle-checked output here —
+      // q_text_search checks the ranking computed FROM it
+      Search.invertedIndex(Tables.load(s, dir, "documents"), "doc_id", "text")
+        .filter(col("term").isin(searchTerms: _*))
+        .orderBy(col("term"), col("doc_id")),
+      {
+      val inList = searchTerms.map(t => s"'$t'").mkString(", ")
+      s"""WITH d AS (
+           SELECT doc_id,
+             list_filter(string_split_regex(LOWER(TRIM(text)), '\\s+'),
+               x -> LENGTH(x) > 0) AS t
+           FROM documents),
+         p AS (SELECT doc_id, UNNEST(t) AS term FROM d)
+         SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
+         FROM p WHERE term IN ($inList)
+         GROUP BY term, doc_id ORDER BY term, doc_id"""
+    }),
+
+    // ---- exact-phrase search over the positional index ----
+    QueryDef("q_phrase_search", (s, dir) =>
+      Search.phraseSearch(
+        Search.positionalIndex(Tables.load(s, dir, "documents"), "doc_id", "text"),
+        Seq("query", "join"), k = 20)
+        .orderBy(col("n_matches").desc, col("doc_id")),
+      """WITH d AS (
+           SELECT doc_id,
+             string_split_regex(LOWER(TRIM(text)), '\s+') AS t
+           FROM documents),
+         p AS (
+           SELECT doc_id, UNNEST(t) AS term,
+             generate_subscripts(t, 1) AS pos
+           FROM d),
+         a AS (SELECT doc_id, pos FROM p WHERE term = 'query'),
+         b AS (SELECT doc_id, pos FROM p WHERE term = 'join')
+         SELECT a.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_matches,
+           CAST(MIN(a.pos) - 1 AS BIGINT) AS first_pos
+         FROM a JOIN b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+         GROUP BY a.doc_id
+         ORDER BY n_matches DESC, a.doc_id LIMIT 20"""),
+
+    // ---- containment / quote search (asymmetric shingle coverage) ----
+    QueryDef("q_quote_search", (s, dir) => {
+      // query passage = doc 0's text, selected IN-PLAN: doc 0 itself
+      // must come back at containment 1.0, everything else ranks by
+      // how much of the passage's 3-gram set it carries
+      val docs = Tables.load(s, dir, "documents")
+      Search.containmentSearchDoc(docs, "doc_id", "text",
+          docs.filter(col("doc_id") === 0L).select(col("text")), n = 3, k = 20)
+        .orderBy(col("n_contained").desc, col("doc_id"))
+    },
+      """WITH qt AS (
+           SELECT string_split_regex(LOWER(TRIM(text)), '\s+') AS t
+           FROM documents WHERE doc_id = 0),
+         qs AS (
+           SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS sh
+           FROM qt, UNNEST(range(1, GREATEST(LEN(t) - 3, 0) + 2)) AS u(i)
+           WHERE LENGTH(array_to_string(t[i:i+2], ' ')) > 0),
+         nq AS (SELECT COUNT(*) AS nq FROM qs),
+         dt AS (
+           SELECT doc_id, string_split_regex(LOWER(TRIM(text)), '\s+') AS t
+           FROM documents),
+         ds AS (
+           SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS sh
+           FROM dt, UNNEST(range(1, GREATEST(LEN(t) - 3, 0) + 2)) AS u(i)
+           WHERE LENGTH(array_to_string(t[i:i+2], ' ')) > 0)
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_contained,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / CAST(MAX(nq) AS DOUBLE), 6)
+             AS containment
+         FROM ds JOIN qs USING (sh) CROSS JOIN nq
+         GROUP BY doc_id
+         ORDER BY n_contained DESC, doc_id LIMIT 20"""),
+
+    // ---- incremental index maintenance (≡ rebuild, oracle-proven) ----
+    QueryDef("q_index_update", (s, dir) => {
+      // planted delta against the v1 corpus: every 17th doc edited,
+      // every 41st re-added as a new id, every 31st deleted. The
+      // output is the UPDATED index (restricted to the standing terms);
+      // the oracle builds the v2 corpus from scratch and indexes it —
+      // the incremental path must reproduce the rebuild exactly
+      // the id offset stays IN-PLAN (broadcast 1-row cross join, like
+      // the oracle's CROSS JOIN o) — an eager agg().head() here would
+      // add a full extra table scan inside the benched region
+      val v1 = Tables.load(s, dir, "documents")
+      val off = broadcast(v1.agg((max(col("doc_id")) + 1L).as("_off")))
+      val edits = v1.filter(col("doc_id") % 17 === 0 && col("doc_id") % 31 =!= 0)
+        .select(col("doc_id"), concat(col("text"), lit(" updated spark query")).as("text"))
+      val adds = v1.filter(col("doc_id") % 41 === 0).crossJoin(off)
+        .select((col("doc_id") + col("_off")).as("doc_id"), col("text"))
+      val deletes = v1.filter(col("doc_id") % 31 === 0).select(col("doc_id"))
+      Search.updateIndex(
+          Search.invertedIndex(v1, "doc_id", "text"),
+          edits.unionByName(adds), deletes, "doc_id", "text")
+        .filter(col("term").isin(searchTerms: _*))
+        .orderBy(col("term"), col("doc_id"))
+    },
+      {
+      val inList = searchTerms.map(t => s"'$t'").mkString(", ")
+      s"""WITH o AS (SELECT MAX(doc_id) + 1 AS off FROM documents),
+         v2 AS (
+           SELECT doc_id,
+             CASE WHEN doc_id % 17 = 0
+               THEN text || ' updated spark query' ELSE text END AS text
+           FROM documents WHERE doc_id % 31 <> 0
+           UNION ALL
+           SELECT doc_id + off, text
+           FROM documents CROSS JOIN o WHERE doc_id % 41 = 0),
+         d AS (
+           SELECT doc_id,
+             list_filter(string_split_regex(LOWER(TRIM(text)), '\\s+'),
+               x -> LENGTH(x) > 0) AS t
+           FROM v2),
+         p AS (SELECT doc_id, UNNEST(t) AS term FROM d)
+         SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
+         FROM p WHERE term IN ($inList)
+         GROUP BY term, doc_id ORDER BY term, doc_id"""
+    }),
+
+    // ---- proximity search (terms within a slop window) ----
+    QueryDef("q_near_search", (s, dir) =>
+      Search.proximitySearch(
+        Search.positionalIndex(Tables.load(s, dir, "documents"), "doc_id", "text"),
+        "query", "join", slop = 3, k = 20)
+        .orderBy(col("n_pairs").desc, col("doc_id")),
+      """WITH d AS (
+           SELECT doc_id,
+             string_split_regex(LOWER(TRIM(text)), '\s+') AS t
+           FROM documents),
+         p AS (
+           SELECT doc_id, UNNEST(t) AS term,
+             generate_subscripts(t, 1) AS pos
+           FROM d),
+         a AS (SELECT doc_id, pos FROM p WHERE term = 'query'),
+         b AS (SELECT doc_id, pos FROM p WHERE term = 'join')
+         SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_pairs
+         FROM a JOIN b ON a.doc_id = b.doc_id AND ABS(b.pos - a.pos) <= 3
+         GROUP BY a.doc_id
+         ORDER BY n_pairs DESC, a.doc_id LIMIT 20"""),
+
+    // ---- snippet extraction around the first hit ----
+    QueryDef("q_search_snippets", (s, dir) =>
+      Search.searchSnippets(Tables.load(s, dir, "documents"),
+          "doc_id", "text", "spark", k = 20)
+        .orderBy(col("tf").desc, col("doc_id")),
+      """WITH d AS (
+           SELECT doc_id,
+             string_split_regex(LOWER(TRIM(text)), '\s+') AS t
+           FROM documents),
+         m AS (
+           SELECT doc_id, t,
+             COALESCE(list_position(t, 'spark'), 0) AS p,
+             CAST(LEN(list_filter(t, x -> x = 'spark')) AS BIGINT) AS tf
+           FROM d)
+         SELECT doc_id, tf,
+           CAST(p - 1 AS BIGINT) AS first_pos,
+           array_to_string(t[GREATEST(p - 4, 1) : GREATEST(p - 4, 1) + 8], ' ')
+             AS snippet
+         FROM m WHERE p > 0
+         ORDER BY tf DESC, doc_id LIMIT 20"""),
+    // ---- cluster-health audit over the Lloyd run ----
+    QueryDef("q_cluster_quality", (s, dir) => {
+      // the q_cluster_kmeans planted geometry (disjoint-support groups,
+      // exact-dyadic jitter, one-hot init): assignments are certain and
+      // every member cosine is the same op sequence in both engines,
+      // so the per-cluster mean/min are analytic for the oracle while
+      // the operator still runs the full generic Lloyd machinery
+      val K = 8
+      val ids = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("id"))
+      val g = col("id") % K
+      val d = ((col("id") % 5) + 1).cast("double") / 1024.0
+      val v = array((0 until 64).map { dim =>
+        when(g === dim, lit(1.0)).when(g === (dim - 8), d).otherwise(lit(0.0))
+      }: _*)
+      val planted = ids.select(col("id"), v.as("v"))
+      val init = (0 until K).map(gi =>
+        Array.tabulate(64)(dd => if (dd == gi) 1.0 else 0.0)).toArray
+      graft.ops.Similarity.clusterQuality(planted, "id", "v",
+          nClusters = K, lloydIters = 2, init = Some(init))
+        .orderBy(col("cid"))
+    },
+      // analytic replay of the planted Lloyd run (q_cluster_kmeans
+      // oracle), aggregated per cluster
+      """WITH d AS (
+           SELECT CAST(vec_id AS BIGINT) AS id,
+             vec_id % 8 AS g,
+             (vec_id % 5 + 1) / 1024.0 AS dlt
+           FROM embeddings),
+         c AS (SELECT g, AVG(dlt) AS c2 FROM d GROUP BY g),
+         m AS (
+           SELECT id, CAST(d.g AS INTEGER) AS cid,
+             (1.0 + dlt * c2) /
+               (SQRT(1.0 + dlt * dlt) * SQRT(1.0 + c2 * c2)) AS cosr
+           FROM d JOIN c ON d.g = c.g)
+         SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_members,
+           ROUND(AVG(cosr), 6) AS mean_cos,
+           ROUND(MIN(cosr), 6) AS min_cos
+         FROM m GROUP BY cid ORDER BY cid"""),
+
+    // ---- hybrid retrieval: BM25 top-n x cosine top-n, RRF fusion ----
+    QueryDef("q_search_hybrid", (s, dir) =>
+      // both candidate lists use their proven cross-engine rankings
+      // (q_text_search scoring, q_ann_topk cosines); the integer ranks
+      // make the fused score the same two-term double expression in
+      // both engines — no score normalization to diverge
+      Search.hybridSearch(
+        Tables.load(s, dir, "documents"), "doc_id", "text",
+        Seq("spark", "query", "join", "filter"),
+        Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
+        queryVec(s, dir), n = 50, k = 20)
+        .orderBy(col("rrf").desc, col("doc_id")),
+      {
+      val terms = Seq("spark", "query", "join", "filter")
+      val tf = terms.zipWithIndex.map { case (t, i) =>
+        s"CAST(len(list_filter(t, x -> x = '$t')) AS BIGINT) AS tf_$i"
+      }.mkString(", ")
+      val dfAgg = terms.indices.map(i =>
+        s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
+        .mkString(", ")
+      val contrib = terms.indices.map(i =>
+        s"""(CASE WHEN tf_$i > 0 AND df_$i > 0
+            THEN (CAST(tf_$i AS DOUBLE) / (CAST(tf_$i AS DOUBLE) + 1.5)) *
+                 (CAST(n_corpus AS DOUBLE) / CAST(df_$i AS DOUBLE))
+            ELSE 0.0 END)""").mkString(" + ")
+      val nHit = terms.indices.map(i =>
+        s"(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""WITH d AS (
+           SELECT doc_id,
+             list_filter(string_split_regex(LOWER(TRIM(text)), '\\s+'),
+               x -> LENGTH(x) > 0) AS t
+           FROM documents),
+         n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_corpus FROM documents),
+         tfs AS (SELECT doc_id, $tf FROM d),
+         dfr AS (SELECT $dfAgg FROM tfs),
+         s AS (
+           SELECT doc_id, CAST($nHit AS BIGINT) AS n_hit,
+             0.0 + $contrib AS score_raw
+           FROM tfs CROSS JOIN dfr CROSS JOIN n),
+         tl AS (
+           SELECT doc_id, ROUND(score_raw, 6) AS score FROM s
+           WHERE n_hit > 0 ORDER BY score_raw DESC, doc_id LIMIT 50),
+         tr AS (
+           SELECT doc_id, CAST(ROW_NUMBER() OVER
+             (ORDER BY score DESC, doc_id) AS BIGINT) AS rank_text
+           FROM tl),
+         q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
+               FROM embeddings WHERE vec_id = 0),
+         vl AS (
+           SELECT vec_id AS doc_id,
+             ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv),
+               6) AS simr
+           FROM embeddings CROSS JOIN q
+           ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv)
+             DESC, vec_id LIMIT 50),
+         vr AS (
+           SELECT doc_id, CAST(ROW_NUMBER() OVER
+             (ORDER BY simr DESC, doc_id) AS BIGINT) AS rank_vec
+           FROM vl)
+         SELECT doc_id, rank_text, rank_vec, rrf FROM (
+           SELECT COALESCE(tr.doc_id, vr.doc_id) AS doc_id,
+             rank_text, rank_vec,
+             ROUND(COALESCE(1.0 / (60 + rank_text), 0.0) +
+                   COALESCE(1.0 / (60 + rank_vec), 0.0), 6) AS rrf
+           FROM tr FULL OUTER JOIN vr ON tr.doc_id = vr.doc_id
+           ORDER BY rrf DESC, doc_id LIMIT 20)
+         ORDER BY rrf DESC, doc_id"""
+    }),
+    // ---- JL random projection (embedding compression) ----
+    QueryDef("q_dim_reduce", (s, dir) =>
+      // 64 → 8 dims; the ±1 sign matrix is md5-derived so the oracle
+      // rebuilds it and replays every dot product bit-exactly
+      Similarity.randomProjection(Tables.load(s, dir, "embeddings"),
+          "vec_id", "embedding", outDims = 8)
+        .orderBy(col("id"), col("out_dim")),
+      """WITH s AS (
+           SELECT j, list(CASE WHEN CAST(('0x' || substr(
+               md5('rp:42:' || j || ':' || i), 1, 1)) AS INT) % 2 = 0
+             THEN 1.0 ELSE -1.0 END ORDER BY i) AS sv
+           FROM range(8) r1(j) CROSS JOIN range(64) r2(i) GROUP BY j)
+         SELECT vec_id AS id, CAST(j AS BIGINT) AS out_dim,
+           ROUND(list_dot_product(sv, CAST(embedding AS DOUBLE[])), 6) AS val
+         FROM embeddings CROSS JOIN s ORDER BY id, out_dim"""),
+    // ---- embedding outliers over the Lloyd run ----
+    QueryDef("q_emb_outliers", (s, dir) => {
+      // the q_cluster_kmeans planted geometry with amplified jitter
+      // (d = (id%5+1)/64): assignments are certain, the within-cluster
+      // cosine spread (~1e-3) dwarfs float noise, so the below-mean
+      // flag is engine-exact while still exercising the full generic
+      // clustering machinery
+      val K = 8
+      val ids = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("id"))
+      val g = col("id") % K
+      val d = ((col("id") % 5) + 1).cast("double") / 64.0
+      val v = array((0 until 64).map { dim =>
+        when(g === dim, lit(1.0)).when(g === (dim - 8), d).otherwise(lit(0.0))
+      }: _*)
+      val init = (0 until K).map(gi =>
+        Array.tabulate(64)(dd => if (dd == gi) 1.0 else 0.0)).toArray
+      Similarity.clusterOutliers(ids.select(col("id"), v.as("v")),
+          "id", "v", nClusters = K, lloydIters = 2, init = Some(init))
+        .orderBy(col("id"))
+    },
+      // analytic replay of the planted Lloyd run (the q_cluster_quality
+      // derivation with the amplified /64 jitter) plus the below-mean
+      // flag
+      """WITH d AS (
+           SELECT CAST(vec_id AS BIGINT) AS id,
+             vec_id % 8 AS g,
+             (vec_id % 5 + 1) / 64.0 AS dlt
+           FROM embeddings),
+         c AS (SELECT g, AVG(dlt) AS c2 FROM d GROUP BY g),
+         m AS (
+           SELECT id, CAST(d.g AS INTEGER) AS cid,
+             (1.0 + dlt * c2) /
+               (SQRT(1.0 + dlt * dlt) * SQRT(1.0 + c2 * c2)) AS cosr
+           FROM d JOIN c ON d.g = c.g),
+         mm AS (SELECT cid, AVG(cosr) AS mc FROM m GROUP BY cid)
+         SELECT id, cid, ROUND(cosr, 6) AS cos,
+           ROUND(mc, 6) AS cluster_mean,
+           (cosr < mc) AS is_outlier
+         FROM m JOIN mm USING (cid) ORDER BY id"""),
+
+    /* Product quantization (Jégou et al., TPAMI 2011) —
+     * the compressed-domain ANN path: deterministic sampled codebooks,
+     * PQ encoding (64 doubles → 8 nibble codes), asymmetric-distance
+     * top-k, and the recall audit against the exact ranking. Codebooks
+     * are (md5(id), id)-sampled, so every stage — including the
+     * approximate ranking — is engine-exact and recomputed end to end by
+     * its DuckDB oracle.
+     */
+    // ---- PQ encoding: codes + quantization error ----
+    QueryDef("q_pq_encode", (s, dir) => {
+      val e = emb(s, dir)
+      val cb = storedCodebooks(s, dir, "pq_cb_sampled_raw_v1")(
+        Similarity.pqCodebooks(e, "vec_id", "embedding", M, K))
+      Similarity.pqEncode(e, "vec_id", "embedding", cb)
+        .select(col("vec_id"),
+          concat_ws("-", col("codes").cast("array<string>")).as("codes"),
+          round(col("err"), 6).as("err"))
+        .orderBy(col("vec_id"))
+    },
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         $pqSql
+         SELECT vec_id,
+           array_to_string(list(code ORDER BY j), '-') AS codes,
+           ROUND(list_reduce(list(dist ORDER BY j), (a, b) -> a + b), 6) AS err
+         FROM best GROUP BY vec_id ORDER BY vec_id"""),
+
+    // ---- asymmetric-distance top-k, planted-certainty form ----
+    QueryDef("q_pq_topk", (s, dir) => {
+      val corpus = withPqProbeCopies(s, dir)
+      val cb = storedCodebooks(s, dir, "pq_cb_sampled_copies_v1")(
+        Similarity.pqCodebooks(corpus, "vec_id", "embedding", M, K))
+      val enc = Similarity.pqEncode(corpus, "vec_id", "embedding", cb)
+      Similarity.pqAdcTopK(enc, "vec_id", "codes", cb, probe(s, dir), topK = 10)
+        .select(col("vec_id"), round(col("approx_dist"), 6).as("approx_dist"))
+    },
+      s"""WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         o AS (SELECT MAX(vec_id) + 1 AS off FROM v0),
+         v AS (SELECT * FROM v0
+           UNION ALL
+           SELECT off + i, (SELECT e FROM v0 WHERE vec_id = 0)
+           FROM o CROSS JOIN (SELECT UNNEST(range(0, 9)) AS i)),
+         $pqSql,
+         qd AS (SELECT j, code, dist FROM d0 WHERE vec_id = 0),
+         adc AS (SELECT b.vec_id,
+             list_reduce(list(qd.dist ORDER BY b.j), (a, b2) -> a + b2) AS ad
+           FROM best b JOIN qd ON b.j = qd.j AND b.code = qd.code
+           GROUP BY b.vec_id)
+         SELECT vec_id, ROUND(ad, 6) AS approx_dist
+         FROM adc ORDER BY ad, vec_id LIMIT 10"""),
+
+    // ---- recall@10 of ADC vs the exact squared-L2 ranking ----
+    QueryDef("q_pq_recall", (s, dir) => {
+      val e = emb(s, dir)
+      val cb = storedCodebooks(s, dir, "pq_cb_sampled_raw_v1")(
+        Similarity.pqCodebooks(e, "vec_id", "embedding", M, K))
+      Similarity.pqRecall(e, "vec_id", "embedding", cb, probe(s, dir), k = 10)
+    },
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+         $pqSql,
+         q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+         exact AS (SELECT vec_id FROM (
+             SELECT v.vec_id,
+               list_reduce(list_transform(range(1, 65),
+                 i -> (v.e[i] - q.qe[i]) * (v.e[i] - q.qe[i])),
+                 (a, b) -> a + b) AS d
+             FROM v CROSS JOIN q)
+           ORDER BY d, vec_id LIMIT 10),
+         qd AS (SELECT j, code, dist FROM d0 WHERE vec_id = 0),
+         adc AS (SELECT vec_id FROM (
+             SELECT b.vec_id,
+               list_reduce(list(qd.dist ORDER BY b.j), (a, b2) -> a + b2) AS ad
+             FROM best b JOIN qd ON b.j = qd.j AND b.code = qd.code
+             GROUP BY b.vec_id)
+           ORDER BY ad, vec_id LIMIT 10)
+         SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / 10.0, 6) AS recall
+         FROM exact JOIN adc USING (vec_id)"""),
+
+    // ---- ADC top-k under TRAINED codebooks (4 Lloyd steps) ----
+    QueryDef("q_pq_trained", (s, dir) => {
+      val raw = emb(s, dir)
+      val q = raw.select(col("vec_id"),
+        Similarity.pqQuantize(col("embedding")).as("qv"))
+      val cb = storedCodebooks(s, dir, "pq_cb_trained_v1")(
+        Similarity.pqTrainCodebooks(raw, "vec_id", "embedding",
+          M, K, iters = 4))
+      val qprobe = q.filter(col("vec_id") === 0)
+        .head().getSeq[Double](1).toArray
+      Similarity.pqAdcTopK(
+          Similarity.pqEncode(q, "vec_id", "qv", cb),
+          "vec_id", "codes", cb, qprobe, topK = 10)
+        // scale the quantized-grid distance back to real space before
+        // rounding: /2^40 is exact, and rounding a ~0.6 double to 6 dp
+        // is engine-stable where rounding a ~6e11 one is sub-ULP noise
+        .select(col("vec_id"),
+          round(col("approx_dist") / lit(1099511627776.0), 6).as("approx_dist"))
+    },
+      s"""WITH $pqTrainPrefix,
+         ${pqAdcSql("c4")}
+         SELECT vec_id, ROUND(ad / 1099511627776.0, 6) AS approx_dist
+         FROM adc_c4 ORDER BY ad, vec_id LIMIT 10"""),
+
+    // ---- the training payoff: mean recall@10 over 10 probes ----
+    QueryDef("q_pq_gain", (s, dir) => {
+      val raw = emb(s, dir)
+      val q = raw.select(col("vec_id"),
+        Similarity.pqQuantize(col("embedding")).as("qv"))
+      val probes = q.filter(col("vec_id") < 10).orderBy(col("vec_id"))
+        .collect().map(r => r.getAs[Number](0).longValue ->
+          r.getSeq[Double](1).toArray).toSeq
+      val sampled = storedCodebooks(s, dir, "pq_cb_sampled_q_v1")(
+        Similarity.pqCodebooks(q, "vec_id", "qv", M, K))
+      val trained = storedCodebooks(s, dir, "pq_cb_trained_v1")(
+        Similarity.pqTrainCodebooks(raw, "vec_id", "embedding",
+          M, K, iters = 4))
+      // ONE plan for both codebooks (r16): the exact ranking is shared
+      // — it does not depend on the codebook — so the corpus is scanned
+      // once for it instead of once per codebook; rows are identical
+      Similarity.pqRecallMeanMulti(q, "vec_id", "qv",
+          Seq("sampled" -> sampled, "trained" -> trained), probes, k = 10)
+        .select(col("codebook"), col("k"), col("n_probes"),
+          col("n_hits"), col("mean_recall"))
+        .orderBy(col("codebook"))
+    },
+      s"""WITH $pqTrainPrefix,
+         ${pqBatchTopSql("c0", "top_sampled")},
+         ${pqBatchTopSql("c4", "top_trained")},
+         qs AS (SELECT vec_id AS p, e AS qe FROM v WHERE vec_id < 10),
+         exactd AS (SELECT q.p, v.vec_id,
+             list_reduce(list_transform(range(1, 65),
+               i -> (v.e[i] - q.qe[i]) * (v.e[i] - q.qe[i])),
+               (a, b) -> a + b) AS d
+           FROM v CROSS JOIN qs q),
+         exact AS (SELECT p, vec_id FROM (
+             SELECT p, vec_id,
+               ROW_NUMBER() OVER (PARTITION BY p ORDER BY d, vec_id) AS rn
+             FROM exactd) WHERE rn <= 10),
+         tops AS (
+           SELECT 'sampled' AS codebook, p, vec_id FROM top_sampled
+           UNION ALL
+           SELECT 'trained', p, vec_id FROM top_trained),
+         hits AS (SELECT codebook, COUNT(*) AS n_hits
+           FROM tops JOIN exact USING (p, vec_id) GROUP BY 1)
+         SELECT c.codebook, 10 AS k, 10 AS n_probes,
+           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+           ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 100.0, 6) AS mean_recall
+         FROM (SELECT 'sampled' AS codebook UNION ALL SELECT 'trained') c
+         LEFT JOIN hits h USING (codebook)
+         ORDER BY codebook"""),
+    // ---- IVF probe/recall sweep on planted geometry ----
+    QueryDef("q_ivf_sweep", (s, dir) => {
+      // the q_cluster_kmeans planted frame: v(id) = e_g + δ·e_{8+g},
+      // g = id%8, δ = (id%5+1)/1024 exact dyadic. Query e_0 + e_1 ties
+      // cells 0 and 1 exactly (stable sort → probe order 0,1,2,…), and
+      // the true top-10 is the 10 lowest-id δ=1/1024 vectors of groups
+      // 0 and 1 — 5 per cell — so recall@10 is 0.5 at nProbe=1 and 1.0
+      // from nProbe=2: the whole tradeoff curve is analytic, not
+      // empirical, while the operator runs its full generic machinery.
+      val K = 8
+      val ids = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("id"))
+      val g = col("id") % K
+      val d = ((col("id") % 5) + 1).cast("double") / 1024.0
+      val v = array((0 until 64).map { dim =>
+        when(g === dim, lit(1.0)).when(g === (dim - 8), d).otherwise(lit(0.0))
+      }: _*)
+      val centroids = (0 until K).map(gi =>
+        Array.tabulate(64)(dd => if (dd == gi) 1.0 else 0.0)).toArray
+      val query = Array.tabulate(64)(dd => if (dd <= 1) 1.0 else 0.0)
+      Similarity.ivfProbeSweep(ids.select(col("id"), v.as("v")),
+          "id", "v", query, k = 10, centroids, probes = Seq(1, 2, 4, 8))
+        .orderBy(col("n_probe"))
+    },
+      """WITH d AS (SELECT CAST(vec_id AS BIGINT) AS id,
+             vec_id % 8 AS g,
+             (vec_id % 5 + 1) / 1024.0 AS dlt
+           FROM embeddings),
+         s AS (SELECT id, g,
+             CASE WHEN g <= 1
+               THEN 1.0 / (SQRT(1.0 + dlt * dlt) * SQRT(2.0))
+               ELSE 0.0 END AS sim
+           FROM d),
+         t10 AS (SELECT id FROM s ORDER BY sim DESC, id LIMIT 10),
+         probes AS (SELECT UNNEST([1, 2, 4, 8]) AS p),
+         cand AS (SELECT p.p, s.id, s.sim FROM probes p JOIN s ON s.g < p.p),
+         top AS (SELECT p, id FROM (
+             SELECT p, id,
+               ROW_NUMBER() OVER (PARTITION BY p ORDER BY sim DESC, id) AS rn
+             FROM cand) WHERE rn <= 10),
+         agg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS n_candidates
+           FROM cand GROUP BY 1),
+         hits AS (SELECT t.p, CAST(COUNT(*) AS BIGINT) AS n_hits
+           FROM top t JOIN t10 ON t.id = t10.id GROUP BY 1)
+         SELECT agg.p AS n_probe, agg.n_candidates, hits.n_hits,
+           ROUND(CAST(hits.n_hits AS DOUBLE) / 10.0, 6) AS recall_at_10
+         FROM agg JOIN hits ON agg.p = hits.p
+         ORDER BY n_probe"""),
+
+    /* Incremental IVF index
+     * maintenance and the approximate-percentile MAD switch.
+     *
+     * q_ivf_update is deterministic by geometry, not by luck: the index's
+     * centroids are FIXED one-hot axis vectors over integer-quantized
+     * embeddings, so argmax-cosine cell assignment reduces to an integer
+     * argmax (exact dot = the component, common denominator |v|, distinct
+     * integers divide to distinct doubles) with a min-index tie-break that
+     * `withIvfCid`'s (sim, -idx) struct-max and DuckDB's
+     * `list_position(list_max)` both implement — the oracle replays the
+     * assignment of the FULL corpus, proving incremental append ≡
+     * rebuild-assign wherever the batch lands.
+     */
+    // ---- incremental IVF maintenance (r8 verdict item 6) ----
+    QueryDef("q_ivf_update", (s, dir) => {
+      val path = ivfFixtureDir(s, dir)
+      // absorb the batch; the anti-join makes re-delivery a no-op, so
+      // every pass after the first appends nothing and the read below
+      // is stable
+      Similarity.updateIvfIndex(s, path,
+        quantized(s, dir).filter(col("vec_id") % 10 === 0), "vec_id", "vq")
+      s.read.parquet(path)
+        .groupBy(col("ivf_cid"))
+        .agg(countDistinct(col("vec_id")).as("n_ids"))
+        .orderBy(col("ivf_cid"))
+    },
+      """WITH q AS (SELECT vec_id,
+             list_transform(embedding[1:8],
+               x -> CAST(ROUND(CAST(x AS DOUBLE) * 100) AS BIGINT)) AS v8
+           FROM embeddings)
+         SELECT CAST(list_position(v8, list_max(v8)) - 1 AS INT) AS ivf_cid,
+           CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_ids
+         FROM q GROUP BY 1 ORDER BY 1"""),
+
+    /* MMR diversity re-rank over ANN candidates. The
+     * greedy selection is replayed in the oracle as k chained CTEs — the
+     * SQL is generated by the same iteration loop the Spark operator
+     * runs, and every selection compares BIGINT micro-quantized scores,
+     * so the two engines take identical argmax branches.
+     */
+    QueryDef("q_mmr_rerank", (s, dir) => {
+      val e = Tables.load(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val probes = e.filter(col("vec_id").isin(Probes.map(Long.box): _*))
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"),
+          Similarity.cosine(col("embedding"), col("pv")).as("rel"),
+          col("embedding"))
+      val wc = Window.partitionBy(col("probe_id"))
+        .orderBy(round(col("rel") * 1e6).cast("long").desc, col("vec_id"))
+      val cands = scored.withColumn("_rn", row_number().over(wc))
+        .filter(col("_rn") <= CandCut).drop("_rn")
+      Similarity.mmrRerank(cands, "probe_id", "vec_id", "rel", "embedding",
+          k = MmrK, lambdaNum = LambdaNum, lambdaDen = LambdaDen)
+        .orderBy(col("probe_id"), col("pos"))
+    },
+      mmrSql),
+    // ---- scalar int8 quantization top-k (embedding storage at scale) ----
+    QueryDef("q_sq8_topk", (s, dir) => {
+      // per-dimension global bounds -> int8 codes -> DEQUANTIZED cosine
+      // top-10 for the id-0 probe (raw code dots are biased under the
+      // affine map; real SQ8 retrieval reconstructs before scoring).
+      // floor(u + 0.5) instead of round(): IEEE double arithmetic is
+      // bit-defined across engines, round-half tie policies are not,
+      // so DuckDB replays the codes exactly. Bounds are STAGED
+      // training-time state (r14 verdict item 2, the PQ-codebook
+      // precedent): written once via storedFixture, so the timed path
+      // prices the serving scan + TakeOrdered only. Doubles round-trip
+      // parquet bit-exactly, so the staged bounds are the identical
+      // values the aggregate produced and the oracle (which replays
+      // the full bounds build from the base table) is unchanged.
+      val (mn, mx) = storedSq8Bounds(s, dir)
+      Similarity.sq8TopKFromBounds(Tables.load(s, dir, "embeddings"),
+        "vec_id", "embedding", mn, mx, queryId = 0L, k = 10)
+    },
+      sq8TopkOracle),
+
+    // ---- SQ8 recall@10 vs the exact float-cosine ranking ----
+    QueryDef("q_sq8_recall", (s, dir) => {
+      // the family-completeness row (r14 verdict item 3): every ANN
+      // member publishes its accuracy against the exact ranking
+      // (q_ann_recall, q_pq_recall, q_ivf_sweep) — this is SQ8's.
+      val (mn, mx) = storedSq8Bounds(s, dir)
+      Similarity.sq8Recall(Tables.load(s, dir, "embeddings"),
+        "vec_id", "embedding", mn, mx, queryId = 0L, k = 10)
+    },
+      // exact ranking: cosine of the raw double-cast vectors against
+      // the raw vec-0 probe; approx ranking: the q_sq8_topk rec CTE.
+      // Both tie-break by vec_id; the overlap count is the row.
+      """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         d AS (
+           SELECT vec_id, r.dim, v[r.dim] AS x
+           FROM e CROSS JOIN range(1, 65) r(dim)),
+         b AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY dim),
+         bb AS (SELECT list(mn ORDER BY dim) AS mns,
+                       list(mx ORDER BY dim) AS mxs FROM b),
+         rec AS (
+           SELECT vec_id, list_transform(range(1, 65), i ->
+             CASE WHEN mxs[i] > mns[i] THEN
+               mns[i] + LEAST(GREATEST(FLOOR(
+                 (v[i] - mns[i]) * 255.0 / (mxs[i] - mns[i]) + 0.5),
+                 0), 255) * (mxs[i] - mns[i]) / 255.0
+             ELSE mns[i] END) AS vhat
+           FROM e CROSS JOIN bb),
+         q AS (SELECT vhat AS qh FROM rec WHERE vec_id = 0),
+         qe AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+         approx AS (SELECT vec_id FROM rec CROSS JOIN q
+           ORDER BY list_cosine_similarity(vhat, qh) DESC, vec_id LIMIT 10),
+         exact AS (SELECT vec_id FROM e CROSS JOIN qe
+           ORDER BY list_cosine_similarity(v, qv) DESC, vec_id LIMIT 10)
+         SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / 10.0, 6) AS recall
+         FROM exact JOIN approx USING (vec_id)"""),
+
+    /* The baseline 4:2:0 COLOR JPEG path as a first-class
+     * driver row (r14 verdict item 6 — the last media-family boundary
+     * that was grayscale-only; real corpora are 3-component YCbCr).
+     */
+    // ---- SQ8 top-k served from the stored int8 CODE TABLE ----
+    QueryDef("q_sq8_codes", (s, dir) => {
+      // the compressed-serving variant of q_sq8_topk: scan the stored
+      // 64-byte-per-vector BINARY code table (written once at ingest
+      // next to the bounds — the 4x storage win SQ8 exists for) and
+      // rank with the fused dequantize+cosine codegen kernel. The
+      // arithmetic order is bit-identical to the float path, so the
+      // q_sq8_topk oracle covers this path too; the 1-row probe lookup
+      // against the base table is the queryVec precedent.
+      val (mn, mx) = storedSq8Bounds(s, dir)
+      val e = Tables.load(s, dir, "embeddings")
+      val codes = Tables.storedFixture(s, dir, "sq8_codes_v1")(
+        Similarity.sq8Encode(e, "vec_id", "embedding", mn, mx))
+      val qhat = Similarity.sq8DequantizedProbe(
+        e, "vec_id", "embedding", mn, mx, queryId = 0L)
+      Similarity.sq8TopKFromCodes(codes, "vec_id", "codes",
+        mn, mx, qhat, k = 10)
+    },
+      // the code-table path returns bit-identical rows to the float
+      // path (same IEEE arithmetic order through stored int8 codes),
+      // so q_sq8_topk's oracle text covers it verbatim
+      sq8TopkOracle),
+
+    // ---- IVF cell pruning OVER the SQ8 code table ----
+    QueryDef("q_ivf_sq8", (s, dir) => ivfSq8TopK(s, dir, k = 10),
+      // cell = argmax of the first 8 raw components (one-hot axis
+      // centroids; first index on ties == the engine's (sim, -idx)
+      // struct-max); probed = top-2 cells by the reconstructed
+      // probe's leading components; ranking = the q_sq8_topk rec CTE
+      // restricted to the probed cells
+      """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         d AS (
+           SELECT vec_id, r.dim, v[r.dim] AS x
+           FROM e CROSS JOIN range(1, 65) r(dim)),
+         b AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY dim),
+         bb AS (SELECT list(mn ORDER BY dim) AS mns,
+                       list(mx ORDER BY dim) AS mxs FROM b),
+         rec AS (
+           SELECT vec_id, list_transform(range(1, 65), i ->
+             CASE WHEN mxs[i] > mns[i] THEN
+               mns[i] + LEAST(GREATEST(FLOOR(
+                 (v[i] - mns[i]) * 255.0 / (mxs[i] - mns[i]) + 0.5),
+                 0), 255) * (mxs[i] - mns[i]) / 255.0
+             ELSE mns[i] END) AS vhat
+           FROM e CROSS JOIN bb),
+         q AS (SELECT vhat AS qh FROM rec WHERE vec_id = 0),
+         cid AS (
+           SELECT vec_id,
+             CAST(list_position(v8, list_max(v8)) - 1 AS INT) AS cell
+           FROM (SELECT vec_id,
+                   list_transform(range(1, 9), i -> v[i]) AS v8 FROM e)),
+         probed AS (
+           SELECT CAST(r.i - 1 AS INT) AS cell
+           FROM range(1, 9) r(i) CROSS JOIN q
+           ORDER BY qh[r.i] DESC, r.i LIMIT 2)
+         SELECT rec.vec_id,
+           ROUND(list_cosine_similarity(vhat, qh), 6) AS sim
+         FROM rec
+         JOIN cid ON rec.vec_id = cid.vec_id
+         JOIN probed ON cid.cell = probed.cell
+         CROSS JOIN q
+         ORDER BY list_cosine_similarity(vhat, qh) DESC, rec.vec_id
+         LIMIT 10"""),
+
+    /* The accuracy row for the composed IVF+SQ8 path
+     * (r15 verdict item 2 — cell pruning CAN drop true neighbors, so the
+     * composition must publish recall like every other ANN family member:
+     * q_ann_recall, q_pq_recall, q_sq8_recall), plus the per-cell (LOCAL)
+     * scalar-quantization family (r15 verdict item 7 — true IVFADC
+     * quantizes within the coarse cell: global bounds waste code range in
+     * tight cells, so the A/B row prices exactly what local bounds buy).
+     */
+    // ---- recall@10 of the pruned IVF+SQ8 ranking vs exact float ----
+    QueryDef("q_ivf_sq8_recall", (s, dir) => {
+      // exact side: brute-force float cosine against the RAW vec-0
+      // probe (one scan + TakeOrdered, the q_sq8_recall shape);
+      // approx side: the q_ivf_sq8 composition itself — top-2 of 8
+      // coarse cells, int8 codes, fused dequantize+cosine. The
+      // overlap count is the row; pruning losses (a true neighbor
+      // living in a non-probed cell) show up here and nowhere else.
+      val e = Tables.load(s, dir, "embeddings")
+      val qRaw = e.filter(col("vec_id") === 0L)
+        .select(col("embedding")).head().getSeq[Float](0)
+        .map(_.toDouble).toArray
+      val exact = Similarity.bruteForceTopK(e, "vec_id", "embedding",
+        qRaw, k = 10).select(col("vec_id"))
+      val approx = ivfSq8TopK(s, dir, k = 10)
+        .select(col("vec_id"))
+      exact.join(approx, Seq("vec_id"))
+        .agg(count(lit(1)).as("n_hits"))
+        .select(lit(10).as("k"), col("n_hits"),
+          round(col("n_hits").cast("double") / lit(10.0), 6).as("recall"))
+    },
+      // approx = the q_ivf_sq8 oracle's pruned ranking (cell argmax of
+      // the first 8 raw components, top-2 cells by the reconstructed
+      // probe's leading components, SQ8-reconstructed cosine); exact =
+      // raw float cosine vs the raw vec-0 probe. Both tie-break by
+      // vec_id; the overlap count is the row.
+      """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         d AS (
+           SELECT vec_id, r.dim, v[r.dim] AS x
+           FROM e CROSS JOIN range(1, 65) r(dim)),
+         b AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY dim),
+         bb AS (SELECT list(mn ORDER BY dim) AS mns,
+                       list(mx ORDER BY dim) AS mxs FROM b),
+         rec AS (
+           SELECT vec_id, list_transform(range(1, 65), i ->
+             CASE WHEN mxs[i] > mns[i] THEN
+               mns[i] + LEAST(GREATEST(FLOOR(
+                 (v[i] - mns[i]) * 255.0 / (mxs[i] - mns[i]) + 0.5),
+                 0), 255) * (mxs[i] - mns[i]) / 255.0
+             ELSE mns[i] END) AS vhat
+           FROM e CROSS JOIN bb),
+         q AS (SELECT vhat AS qh FROM rec WHERE vec_id = 0),
+         cid AS (
+           SELECT vec_id,
+             CAST(list_position(v8, list_max(v8)) - 1 AS INT) AS cell
+           FROM (SELECT vec_id,
+                   list_transform(range(1, 9), i -> v[i]) AS v8 FROM e)),
+         probed AS (
+           SELECT CAST(r.i - 1 AS INT) AS cell
+           FROM range(1, 9) r(i) CROSS JOIN q
+           ORDER BY qh[r.i] DESC, r.i LIMIT 2),
+         approx AS (
+           SELECT rec.vec_id
+           FROM rec
+           JOIN cid ON rec.vec_id = cid.vec_id
+           JOIN probed ON cid.cell = probed.cell
+           CROSS JOIN q
+           ORDER BY list_cosine_similarity(vhat, qh) DESC, rec.vec_id
+           LIMIT 10),
+         qe AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+         exact AS (SELECT vec_id FROM e CROSS JOIN qe
+           ORDER BY list_cosine_similarity(v, qv) DESC, vec_id LIMIT 10)
+         SELECT 10 AS k, CAST(COUNT(*) AS BIGINT) AS n_hits,
+           ROUND(CAST(COUNT(*) AS DOUBLE) / 10.0, 6) AS recall
+         FROM exact JOIN approx USING (vec_id)"""),
+
+    // ---- what per-cell bounds buy: the reconstruction-error A/B ----
+    QueryDef("q_sq8_local_gain", (s, dir) => {
+      // corpus-total squared reconstruction error under GLOBAL bounds
+      // vs PER-CELL bounds, in exact integer units (see sq8ErrUnits).
+      // Local bounds provably never lose (each cell's span is a subset
+      // of the global span), and the gain ratio is the honest price of
+      // the extra nCells x dims training state. Recall cannot show
+      // this win here — the global quantizer already ranks exactly
+      // (q_sq8_recall = 1.0) — so error is the metric, the same way
+      // PQ publishes q_pq_gain. One scan + one broadcast join of the
+      // nCells-row bound arrays; the output is a single audit row.
+      val (mn, mx) = storedSq8Bounds(s, dir)
+      val cellArrays = Similarity.sq8CellBoundArrays(
+        localBounds(s, dir), "ivf_cid")
+      val assigned = withCell(Tables.load(s, dir, "embeddings"))
+      val v = col("embedding").cast("array<double>")
+      assigned.join(broadcast(cellArrays), Seq("ivf_cid"))
+        .select(
+          sq8ErrUnits(v, typedlit(mn), typedlit(mx)).as("gu"),
+          sq8ErrUnits(v, col("mns"), col("mxs")).as("lu"))
+        .agg(count(lit(1)).as("n_vectors"),
+          sum(col("gu")).as("global_err_units"),
+          sum(col("lu")).as("local_err_units"))
+        .select(col("n_vectors"), col("global_err_units"),
+          col("local_err_units"),
+          round(col("global_err_units").cast("double") /
+            col("local_err_units"), 6).as("gain"))
+    },
+      // global and per-cell bounds both replayed from the base table;
+      // reconstruction via the floor(u + 0.5) SQ8 formula; per-vector
+      // squared error summed dim-ordered (list_reduce — the Round8j
+      // precedent), then floored to 1e-9 integer units so the corpus
+      // sum is commutative-exact in both engines
+      """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         cid AS (
+           SELECT vec_id,
+             CAST(list_position(v8, list_max(v8)) - 1 AS INT) AS cell
+           FROM (SELECT vec_id,
+                   list_transform(range(1, 9), i -> v[i]) AS v8 FROM e)),
+         d AS (
+           SELECT e.vec_id, cid.cell, r.dim, v[r.dim] AS x
+           FROM e JOIN cid ON e.vec_id = cid.vec_id
+           CROSS JOIN range(1, 65) r(dim)),
+         b AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY dim),
+         bb AS (SELECT list(mn ORDER BY dim) AS mns,
+                       list(mx ORDER BY dim) AS mxs FROM b),
+         lb AS (SELECT cell, dim, MIN(x) AS mn, MAX(x) AS mx
+                FROM d GROUP BY cell, dim),
+         lbb AS (SELECT cell, list(mn ORDER BY dim) AS lmns,
+                        list(mx ORDER BY dim) AS lmxs FROM lb GROUP BY cell),
+         errv AS (
+           SELECT e.vec_id, v,
+             list_transform(range(1, 65), i ->
+               CASE WHEN mxs[i] > mns[i] THEN
+                 mns[i] + LEAST(GREATEST(FLOOR(
+                   (v[i] - mns[i]) * 255.0 / (mxs[i] - mns[i]) + 0.5),
+                   0), 255) * (mxs[i] - mns[i]) / 255.0
+               ELSE mns[i] END) AS gvhat,
+             list_transform(range(1, 65), i ->
+               CASE WHEN lmxs[i] > lmns[i] THEN
+                 lmns[i] + LEAST(GREATEST(FLOOR(
+                   (v[i] - lmns[i]) * 255.0 / (lmxs[i] - lmns[i]) + 0.5),
+                   0), 255) * (lmxs[i] - lmns[i]) / 255.0
+               ELSE lmns[i] END) AS lvhat
+           FROM e JOIN cid ON e.vec_id = cid.vec_id
+           JOIN lbb ON cid.cell = lbb.cell
+           CROSS JOIN bb),
+         err AS (
+           SELECT vec_id,
+             CAST(FLOOR(list_reduce(list_transform(range(1, 65), i ->
+               (v[i] - gvhat[i]) * (v[i] - gvhat[i])), (x, y) -> x + y)
+               * 1e9 + 0.5) AS BIGINT) AS gu,
+             CAST(FLOOR(list_reduce(list_transform(range(1, 65), i ->
+               (v[i] - lvhat[i]) * (v[i] - lvhat[i])), (x, y) -> x + y)
+               * 1e9 + 0.5) AS BIGINT) AS lu
+           FROM errv)
+         SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
+           CAST(SUM(gu) AS BIGINT) AS global_err_units,
+           CAST(SUM(lu) AS BIGINT) AS local_err_units,
+           ROUND(CAST(SUM(gu) AS DOUBLE) / SUM(lu), 6) AS gain
+         FROM err"""),
+
+    // ---- serving from the per-cell-quantized code table ----
+    QueryDef("q_ivf_sq8_local", (s, dir) => {
+      // the locally-quantized sibling of q_ivf_sq8: same coarse
+      // pruning (top-2 of 8 cells, picked by the RAW probe's leading
+      // components — no reconstruction needed on the query side), but
+      // the in-cell scan dequantizes per the cell's own bounds and
+      // scores ASYMMETRICALLY against the raw full-precision query
+      // (ADC — quantizing the query against any one cell's bounds
+      // would bias every other cell). The fused column-bounds kernel
+      // keeps the scan codegen'd; the bound arrays ride a broadcast
+      // join of nCells rows.
+      val e = Tables.load(s, dir, "embeddings")
+      val qRaw = e.filter(col("vec_id") === 0L)
+        .select(col("embedding")).head().getSeq[Float](0)
+        .map(_.toDouble).toArray
+      val probed = qRaw.take(8).zipWithIndex
+        .sortBy { case (x, i) => (-x, i) }.take(2).map(_._2)
+      val cellArrays = Similarity.sq8CellBoundArrays(
+        localBounds(s, dir), "ivf_cid")
+      Similarity.sq8LocalTopKFromCodes(
+        localCodeTable(s, dir)
+          .filter(col("ivf_cid").isin(probed.map(Int.box).toIndexedSeq: _*)),
+        "vec_id", "codes", "ivf_cid", cellArrays, qRaw, k = 10)
+    },
+      // per-cell bounds, per-cell reconstruction, ASYMMETRIC cosine
+      // against the raw vec-0 probe; cells picked by the raw probe's
+      // leading components (no query-side reconstruction)
+      """WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         cid AS (
+           SELECT vec_id,
+             CAST(list_position(v8, list_max(v8)) - 1 AS INT) AS cell
+           FROM (SELECT vec_id,
+                   list_transform(range(1, 9), i -> v[i]) AS v8 FROM e)),
+         d AS (
+           SELECT e.vec_id, cid.cell, r.dim, v[r.dim] AS x
+           FROM e JOIN cid ON e.vec_id = cid.vec_id
+           CROSS JOIN range(1, 65) r(dim)),
+         lb AS (SELECT cell, dim, MIN(x) AS mn, MAX(x) AS mx
+                FROM d GROUP BY cell, dim),
+         lbb AS (SELECT cell, list(mn ORDER BY dim) AS lmns,
+                        list(mx ORDER BY dim) AS lmxs FROM lb GROUP BY cell),
+         lrec AS (
+           SELECT e.vec_id, cid.cell,
+             list_transform(range(1, 65), i ->
+               CASE WHEN lmxs[i] > lmns[i] THEN
+                 lmns[i] + LEAST(GREATEST(FLOOR(
+                   (v[i] - lmns[i]) * 255.0 / (lmxs[i] - lmns[i]) + 0.5),
+                   0), 255) * (lmxs[i] - lmns[i]) / 255.0
+               ELSE lmns[i] END) AS vhat
+           FROM e JOIN cid ON e.vec_id = cid.vec_id
+           JOIN lbb ON cid.cell = lbb.cell),
+         qe AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+         probed AS (
+           SELECT CAST(r.i - 1 AS INT) AS cell
+           FROM range(1, 9) r(i) CROSS JOIN qe
+           ORDER BY qv[r.i] DESC, r.i LIMIT 2)
+         SELECT lrec.vec_id,
+           ROUND(list_cosine_similarity(vhat, qv), 6) AS sim
+         FROM lrec
+         JOIN probed ON lrec.cell = probed.cell
+         CROSS JOIN qe
+         ORDER BY list_cosine_similarity(vhat, qv) DESC, lrec.vec_id
+         LIMIT 10"""))
+}

@@ -1,20 +1,36 @@
 package graft.queries
 
-import graft.Tables
-import graft.ops.Multimodal
+import graft.{QueryDef, Tables}
+import graft.ops.TextAnalysis
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Streaming-shaped queries run in batch mode (identical plans serve
-  * `readStream` — StreamingSpec proves stream/batch equivalence), plus
-  * the multimodal feature-extraction pipeline.
+/** Streaming-shaped queries run in batch mode: the identical plans
+  * serve `readStream` (StreamingSpec proves stream/batch equivalence).
+  * Windowed aggregates, watermarked dedup and joins, session windows,
+  * drift and quality monitors, and rate limiting.
   */
 object StreamQueries {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_tumbling" -> ((s, dir) => {
+  /** The q_bot_flags plant: one synthetic user firing 200 events at
+    * one-second intervals inside the 2024-01-05 12:00 hour.
+    */
+  private def withBot(s: SparkSession, dir: String): DataFrame = {
+    val base = Tables.load(s, dir, "events")
+      .select(col("user_id"), col("ts"))
+    val bu = base.agg(max(col("user_id"))).head().getAs[Number](0)
+      .longValue + 1L
+    base.unionByName(s.range(0, 200)
+      .select(lit(bu).as("user_id"),
+        timestamp_seconds(lit(1704456000L) + col("id")).as("ts")))
+  }
+
+  private val WindowSec = 21600L // 6 hours
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_stream_tumbling", (s, dir) => {
       // window() exactly as the streaming job uses it; decimal-exact sum.
       Tables.load(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -23,8 +39,12 @@ object StreamQueries {
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("total_value"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
-    "q_stream_hll" -> ((s, dir) => {
+    },
+      """SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+         FROM events GROUP BY 1, 2 ORDER BY window_start, event_type"""),
+    QueryDef("q_stream_hll", (s, dir) => {
       // batch form of Streams.windowedApproxDistinct plus the exact
       // audit (the q_sketch_distinct bounded-error pattern): the HLL++
       // estimate is approximate by design; DuckDB recomputes the EXACT
@@ -51,8 +71,12 @@ object StreamQueries {
               lit(0.10) * col("exact_distinct_users").cast("double")))
             .as("within_band"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
-    "q_stream_session" -> ((s, dir) => {
+    },
+      """SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
+           COUNT(DISTINCT user_id) AS exact_distinct_users, COUNT(*) AS n,
+           TRUE AS within_band
+         FROM events GROUP BY 1, 2 ORDER BY window_start, event_type"""),
+    QueryDef("q_stream_session", (s, dir) => {
       // session_window vs the oracle's gaps-and-islands formulation.
       Tables.load(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -62,8 +86,16 @@ object StreamQueries {
           col("session_window.start").as("session_start"),
           col("n_events"), col("total_value"))
         .orderBy(col("user_id"), col("session_start"))
-    }),
-    "q_stream_sliding" -> ((s, dir) => {
+    },
+      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
+         m AS (SELECT *, CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                 > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk FROM e),
+         g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+                 ROWS UNBOUNDED PRECEDING) AS grp FROM m)
+         SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start"""),
+    QueryDef("q_stream_sliding", (s, dir) => {
       // 1-hour window sliding every 15 minutes: each event lands in 4
       // overlapping windows (window() expands rows, then one shuffle)
       Tables.load(s, dir, "events")
@@ -71,8 +103,13 @@ object StreamQueries {
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"), col("event_type"), col("n"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
-    "q_stream_dedup" -> ((s, dir) => {
+    },
+      """SELECT time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP))
+             - k.k * INTERVAL '15 minutes' AS window_start,
+           event_type, COUNT(*) AS n
+         FROM events CROSS JOIN (SELECT UNNEST([0,1,2,3]) AS k) k
+         GROUP BY 1, 2 ORDER BY window_start, event_type"""),
+    QueryDef("q_stream_dedup", (s, dir) => {
       // planted at-least-once feed: the event table unioned with
       // itself; dedup must emit each event exactly once. This is the
       // batch form (dropDuplicates) of Streams.dedupStream — Spark
@@ -88,183 +125,15 @@ object StreamQueries {
       ev.unionAll(ev)
         .dropDuplicates("event_id")
         .orderBy(col("event_id"))
-    }),
-    "q_stream_interval_join" -> ((s, dir) => {
+    },
+      """SELECT event_id, user_id, event_type, value
+         FROM events ORDER BY event_id"""),
+    QueryDef("q_stream_interval_join", (s, dir) => {
       // stream-stream interval join in its batch form (StreamingSpec
       // runs the same plan as a dual readStream and gets equal output)
       Streams.viewClickJoin(Tables.load(s, dir, "events"))
         .orderBy(col("user_id"), col("view_id"), col("click_id"))
-    }),
-    "q_stream_left_join" -> ((s, dir) => {
-      // the LEFT OUTER variant: unclicked views survive null-padded —
-      // in a stream the null rows emit once the watermark proves no
-      // match can arrive; batch runs the identical plan eagerly
-      Streams.viewClickJoinLeft(Tables.load(s, dir, "events"))
-        .orderBy(col("user_id"), col("view_id"), col("click_id"))
-    }),
-    "q_multimodal_meta" -> ((s, dir) => {
-      // metadata-only media rollup: per (kind, format) counts and size/
-      // duration totals WITHOUT touching payload bytes — the projection
-      // drops the payload expression entirely (asserted: no unhex in
-      // the plan), which at 100 TB is the difference between scanning
-      // kilobytes of metadata and petabytes of media. Metadata is a
-      // deterministic function of the key, so DuckDB reproduces it.
-      val media = Multimodal.syntheticMedia(
-        Tables.load(s, dir, "documents"), "doc_id")
-      Multimodal.metadataOnly(media)
-        .groupBy(col("kind"), col("format"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("width").cast("long")).as("sum_width"),
-          sum(col("height").cast("long")).as("sum_height"),
-          sum(col("duration_ms")).as("sum_duration_ms"))
-        .orderBy(col("kind"), col("format"))
-    }),
-    "q_multimodal_features" -> ((s, dir) => {
-      // REAL binary decode (r12 verdict item 5): genuine PNG payloads
-      // (CRC-framed chunks, zlib IDAT inflated with Inflater, scanline
-      // de-filter) and WAV payloads (RIFF walk, 16-bit PCM) run through
-      // the per-partition decode batch shape; every 97th payload is
-      // corrupted and must come back flagged. The oracle recomputes the
-      // DECODED pixel/sample statistics from the generation rule alone
-      // — it never sees the bytes, so a decoder bug (wrong offset, bad
-      // inflate, missed filter byte) breaks the hash. The float feature
-      // vector stays spec-pinned (MultimodalSpec cross-checks the
-      // decoders against the JDK's own ImageIO/AudioSystem readers).
-      Multimodal.extractFeatures(Multimodal.decodableMedia(
-          Tables.load(s, dir, "documents"), "doc_id"))
-        .select(col("media_id"), col("kind"), col("n_bytes"),
-          col("n_units"), col("unit_sum"), col("unit_min"),
-          col("unit_max"), col("decode_ok"))
-        .orderBy(col("media_id"))
-    }),
-    "q_media_thumbs" -> ((s, dir) =>
-      // the REAL resize pipeline: decode PNG → 2x2 box-average (exact
-      // integer DIV 4) → re-encode as a real PNG → RE-DECODE the
-      // encoded thumbnail and report its pixel stats — a defect in any
-      // of the four stages breaks the hash. thumb_bytes is exact
-      // because the stored-deflate encoder is byte-deterministic.
-      // Audio and corrupted payloads must come back flagged.
-      Multimodal.thumbnails(Multimodal.decodableMedia(
-          Tables.load(s, dir, "documents"), "doc_id"))
-        .toDF().orderBy(col("media_id")))
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_multimodal_features" ->
-      // the real decode's integer-exact face, recomputed from the
-      // generation rule alone (pixels (id+k)%256 row-major; samples
-      // ((id*31+k*7)%65536)-32768; sizes 68+h*(w+1) / 44+2n; every
-      // 97th payload corrupted -> flagged with zeroed stats)
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-             doc_id % 8 + 2 AS w, doc_id % 6 + 2 AS h,
-             doc_id % 50 + 10 AS ns,
-             doc_id % 97 = 0 AS corrupted
-           FROM documents),
-         u AS (
-           SELECT media_id, kind, corrupted,
-             CASE WHEN kind = 'image'
-               THEN CAST(68 + h * (w + 1) AS BIGINT)
-               ELSE CAST(44 + 2 * ns AS BIGINT) END AS n_bytes,
-             CASE WHEN kind = 'image'
-               THEN list_transform(range(0, w * h),
-                 k -> (media_id + k) % 256)
-               ELSE list_transform(range(0, ns),
-                 k -> (media_id * 31 + k * 7) % 65536 - 32768)
-             END AS units
-           FROM m)
-         SELECT media_id, kind, n_bytes,
-           CASE WHEN corrupted THEN 0 ELSE CAST(LEN(units) AS BIGINT) END
-             AS n_units,
-           CASE WHEN corrupted THEN 0 ELSE CAST(list_sum(units) AS BIGINT) END
-             AS unit_sum,
-           CASE WHEN corrupted THEN 0 ELSE CAST(list_min(units) AS BIGINT) END
-             AS unit_min,
-           CASE WHEN corrupted THEN 0 ELSE CAST(list_max(units) AS BIGINT) END
-             AS unit_max,
-           NOT corrupted AS decode_ok
-         FROM u ORDER BY media_id""",
-    "q_media_thumbs" ->
-      // the 2x2 box-average replayed from the generation rule: source
-      // pixel (r,c) = (id + r*w + c) % 256, thumb pixel = 4-pixel sum
-      // // 4; encoded size 68 + th*(tw+1) (stored-deflate determinism)
-      """WITH m AS (
-           SELECT doc_id AS media_id, doc_id % 8 + 2 AS w,
-             doc_id % 6 + 2 AS h,
-             (doc_id % 2 = 0 AND doc_id % 97 <> 0) AS ok
-           FROM documents),
-         t AS (
-           SELECT media_id, w, h, w // 2 AS tw, h // 2 AS th, ok,
-             CASE WHEN ok THEN list_transform(
-               range(0, (w // 2) * (h // 2)), k ->
-                 ((media_id + (2 * (k // (w // 2))) * w
-                     + 2 * (k % (w // 2))) % 256
-                  + (media_id + (2 * (k // (w // 2))) * w
-                     + 2 * (k % (w // 2)) + 1) % 256
-                  + (media_id + (2 * (k // (w // 2)) + 1) * w
-                     + 2 * (k % (w // 2))) % 256
-                  + (media_id + (2 * (k // (w // 2)) + 1) * w
-                     + 2 * (k % (w // 2)) + 1) % 256) // 4)
-             ELSE [] END AS tpx
-           FROM m)
-         SELECT media_id,
-           CAST(CASE WHEN ok THEN w ELSE 0 END AS INT) AS src_w,
-           CAST(CASE WHEN ok THEN h ELSE 0 END AS INT) AS src_h,
-           CAST(CASE WHEN ok THEN tw ELSE 0 END AS INT) AS thumb_w,
-           CAST(CASE WHEN ok THEN th ELSE 0 END AS INT) AS thumb_h,
-           CAST(CASE WHEN ok THEN 68 + th * (tw + 1) ELSE 0 END AS BIGINT)
-             AS thumb_bytes,
-           CAST(CASE WHEN ok THEN list_sum(tpx) ELSE 0 END AS BIGINT)
-             AS px_sum,
-           CAST(CASE WHEN ok THEN list_min(tpx) ELSE 0 END AS BIGINT)
-             AS px_min,
-           CAST(CASE WHEN ok THEN list_max(tpx) ELSE 0 END AS BIGINT)
-             AS px_max,
-           ok AS thumb_ok
-         FROM t ORDER BY media_id""",
-    "q_multimodal_meta" ->
-      """SELECT kind, format, COUNT(*) AS n,
-           CAST(SUM(width) AS BIGINT) AS sum_width,
-           CAST(SUM(height) AS BIGINT) AS sum_height,
-           CAST(SUM(duration_ms) AS BIGINT) AS sum_duration_ms
-         FROM (
-           SELECT ['image','audio','video'][CAST(doc_id % 3 + 1 AS INT)] AS kind,
-             ['png','wav','mp4'][CAST(doc_id % 3 + 1 AS INT)] AS format,
-             (doc_id % 64) * 16 + 16 AS width,
-             (doc_id % 48) * 16 + 16 AS height,
-             doc_id % 120 * 1000 AS duration_ms
-           FROM documents)
-         GROUP BY 1, 2 ORDER BY kind, format""",
-    "q_stream_dedup" ->
-      """SELECT event_id, user_id, event_type, value
-         FROM events ORDER BY event_id""",
-    "q_stream_hll" ->
-      """SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
-           COUNT(DISTINCT user_id) AS exact_distinct_users, COUNT(*) AS n,
-           TRUE AS within_band
-         FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
-    "q_stream_tumbling" ->
-      """SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
-    "q_stream_sliding" ->
-      """SELECT time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP))
-             - k.k * INTERVAL '15 minutes' AS window_start,
-           event_type, COUNT(*) AS n
-         FROM events CROSS JOIN (SELECT UNNEST([0,1,2,3]) AS k) k
-         GROUP BY 1, 2 ORDER BY window_start, event_type""",
-    "q_stream_session" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-         m AS (SELECT *, CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                 > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk FROM e),
-         g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS UNBOUNDED PRECEDING) AS grp FROM m)
-         SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         FROM g GROUP BY user_id, grp ORDER BY user_id, session_start""",
-    "q_stream_interval_join" ->
+    },
       """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
            CAST(v.ts AS TIMESTAMP) AS view_ts, CAST(c.ts AS TIMESTAMP) AS click_ts
          FROM events v JOIN events c
@@ -272,8 +141,14 @@ object StreamQueries {
            AND v.event_type = 'view' AND c.event_type = 'click'
            AND CAST(c.ts AS TIMESTAMP) >= CAST(v.ts AS TIMESTAMP)
            AND CAST(c.ts AS TIMESTAMP) <= CAST(v.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
-         ORDER BY v.user_id, view_id, click_id""",
-    "q_stream_left_join" ->
+         ORDER BY v.user_id, view_id, click_id"""),
+    QueryDef("q_stream_left_join", (s, dir) => {
+      // the LEFT OUTER variant: unclicked views survive null-padded —
+      // in a stream the null rows emit once the watermark proves no
+      // match can arrive; batch runs the identical plan eagerly
+      Streams.viewClickJoinLeft(Tables.load(s, dir, "events"))
+        .orderBy(col("user_id"), col("view_id"), col("click_id"))
+    },
       """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
            CAST(v.ts AS TIMESTAMP) AS view_ts, CAST(c.ts AS TIMESTAMP) AS click_ts
          FROM (SELECT * FROM events WHERE event_type = 'view') v
@@ -281,6 +156,179 @@ object StreamQueries {
            ON v.user_id = c.user_id
            AND CAST(c.ts AS TIMESTAMP) >= CAST(v.ts AS TIMESTAMP)
            AND CAST(c.ts AS TIMESTAMP) <= CAST(v.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
-         ORDER BY v.user_id, view_id, click_id"""
-  )
+         ORDER BY v.user_id, view_id, click_id"""),
+    // ---- streaming windowed content fingerprint (batch form) ----
+    QueryDef("q_stream_fingerprint", (s, dir) =>
+      // identical plan serves readStream (StreamingSpec proves
+      // stream/batch equality); the oracle recomputes each hour's
+      // xor-combined event hashes from scratch
+      Streams.windowedFingerprint(Tables.load(s, dir, "events"), "1 hour")
+        .orderBy(col("window_start")),
+      """SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           bit_xor(CAST(('0x' || substr(md5(
+             CAST(event_id AS VARCHAR) || ':' || CAST(user_id AS VARCHAR) ||
+             ':' || COALESCE(event_type, '') || ':' || COALESCE(props, '')),
+             1, 15)) AS BIGINT)) AS fingerprint
+         FROM events GROUP BY 1 ORDER BY window_start"""),
+    // ---- streaming windowed top-k heavy hitters (batch form) ----
+    QueryDef("q_stream_topk", (s, dir) =>
+      // the counts stage is the watermark-bounded streaming aggregate
+      // (StreamingSpec runs it as a real stream); the top-k cut runs on
+      // the finalized window counts, as it would on the sink
+      graft.streaming.Streams.windowedTopK(
+          Tables.load(s, dir, "events"), "1 hour", k = 3)
+        .orderBy(col("window_start"), col("rk")),
+      """WITH c AS (
+           SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start,
+             event_type, COUNT(*) AS n
+           FROM events GROUP BY 1, 2),
+         r AS (
+           SELECT window_start, event_type, n,
+             CAST(ROW_NUMBER() OVER (PARTITION BY window_start
+               ORDER BY n DESC, event_type) AS BIGINT) AS rk
+           FROM c)
+         SELECT window_start, event_type, n, rk FROM r
+         WHERE rk <= 3 ORDER BY window_start, rk"""),
+    // ---- streaming distribution drift ----
+    QueryDef("q_stream_drift", (s, dir) =>
+      // counts stage is the proven stream-safe windowedCounts; drift is
+      // sink-side. L1 numerators are integers, so the distances are
+      // engine-exact
+      graft.streaming.Streams.windowedDrift(
+          Tables.load(s, dir, "events"), "1 hour")
+        .orderBy(col("window_start")),
+      """WITH c AS (
+           SELECT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS window_start,
+             event_type, COUNT(*) AS n
+           FROM events GROUP BY 1, 2),
+         g AS (SELECT event_type, SUM(n) AS nt FROM c GROUP BY 1),
+         wt AS (SELECT window_start, SUM(n) AS nw FROM c GROUP BY 1),
+         tot AS (SELECT SUM(n) AS n_all FROM c),
+         grid AS (SELECT window_start, event_type, nw, nt
+                  FROM wt CROSS JOIN g),
+         m AS (
+           SELECT grid.window_start, grid.event_type, COALESCE(c.n, 0) AS n,
+             nw, nt
+           FROM grid LEFT JOIN c USING (window_start, event_type))
+         SELECT window_start, CAST(nw AS BIGINT) AS n_events,
+           ROUND(CAST(SUM(ABS(n * n_all - nt * nw)) AS DOUBLE) /
+             CAST(nw * n_all AS DOUBLE), 6) AS l1,
+           ROUND(MAX(CAST(ABS(n * n_all - nt * nw) AS DOUBLE) /
+             CAST(nw * n_all AS DOUBLE)), 6) AS max_dev
+         FROM m CROSS JOIN tot
+         GROUP BY window_start, nw, n_all ORDER BY window_start"""),
+    // ---- watermark-lateness audit ----
+    QueryDef("q_stream_lateness", (s, dir) =>
+      // the synthetic feed arrives perfectly ordered, so late arrivals
+      // are planted in-plan: every 10th event arrives 37 slots late
+      graft.streaming.Streams.latenessProfile(
+          Tables.load(s, dir, "events").withColumn("arrival",
+            col("event_id") + when(col("event_id") % 10 === 0, 37L)
+              .otherwise(0L)),
+          "arrival", bucketSeconds = 600, maxBucket = 23,
+          blockSize = 1000L)
+        .orderBy(col("late_bucket")),
+      """WITH e AS (
+           SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tsu,
+             event_id + CASE WHEN event_id % 10 = 0 THEN 37 ELSE 0 END
+               AS arr
+           FROM events),
+         r AS (
+           SELECT event_id, tsu, MAX(tsu) OVER (ORDER BY arr, event_id
+             ROWS UNBOUNDED PRECEDING) AS run
+           FROM e),
+         l AS (SELECT (run - tsu) // 1000000 AS late_s FROM r)
+         SELECT LEAST(late_s // 600, 23) AS late_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(MAX(late_s) AS BIGINT) AS max_late_s,
+           CAST(SUM(CASE WHEN late_s > 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_late
+         FROM l GROUP BY 1 ORDER BY late_bucket"""),
+    // ---- streaming windowed quality monitor ----
+    QueryDef("q_stream_quality", (s, dir) => {
+      // synthesized event-time (one doc per minute from 2024-01-01)
+      // with junk docs landing in the same windows as their source
+      // docs; the aggregate is the proven watermark+window shape
+      val docs = Tables.load(s, dir, "documents")
+      val junk = docs.filter(col("doc_id") % 50 === 0)
+        .withColumn("text", lit("tiny doc"))
+      val flagged = TextAnalysis.qualityFilterReasons(
+          docs.unionByName(junk), "text")
+        .withColumn("ts",
+          timestamp_seconds(lit(1704067200L) + col("doc_id") * 60L))
+      graft.streaming.Streams.windowedKeepRate(
+          flagged.select(col("ts"), col("keep")), "1 hour")
+        .orderBy(col("window_start"))
+    },
+      s"""WITH corpus AS (
+           SELECT doc_id AS id, text, 's' AS source FROM documents
+           UNION ALL
+           SELECT doc_id, 'tiny doc', 's' FROM documents
+           WHERE doc_id % 50 = 0),
+         ${PipelineQueries.qualityRulesSql},
+         w AS (
+           SELECT DATE_TRUNC('hour', TIMESTAMP '2024-01-01 00:00:00' +
+             id * INTERVAL 1 MINUTE) AS window_start, keep
+           FROM r)
+         SELECT window_start, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+           ROUND(CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE) /
+             CAST(COUNT(*) AS DOUBLE), 6) AS keep_rate
+         FROM w GROUP BY 1 ORDER BY window_start"""),
+
+    /* Streaming rate limiting — the (window, user)
+     * watermarked aggregate with an in-plan threshold filter, the
+     * online half of q_bot_flags. The planted 1-event-per-second bot
+     * guarantees a flagged window; batch replay is the identical plan
+     * the oracle recomputes.
+     */
+    QueryDef("q_stream_ratelimit", (s, dir) =>
+      Streams.userRateFlags(withBot(s, dir), "1 hour", limit = 50L)
+        .orderBy(col("window_start"), col("user_id")),
+      """WITH mx AS (SELECT MAX(user_id) + 1 AS bu FROM events),
+         bot AS (SELECT mx.bu AS user_id,
+             TIMESTAMP '2024-01-05 12:00:00' +
+               UNNEST(range(0, 200)) * INTERVAL 1 SECOND AS ts
+           FROM mx),
+         c AS (SELECT user_id, ts FROM events
+           UNION ALL SELECT user_id, ts FROM bot)
+         SELECT DATE_TRUNC('hour', ts) AS window_start, user_id,
+           CAST(COUNT(*) AS BIGINT) AS n
+         FROM c GROUP BY 1, 2 HAVING COUNT(*) > 50
+         ORDER BY window_start, user_id"""),
+
+    /* The streaming in-window value trend — the
+     * [[graft.ops.TimeSeries.rollingTrend]] idea re-shaped for Structured
+     * Streaming: the regression moments become ONE watermarked
+     * map-combinable aggregate per (window, type), so the identical plan
+     * serves readStream (StreamingSpec drives it over a file source) and
+     * the batch oracle below.
+     */
+    QueryDef("q_stream_trend", (s, dir) =>
+      Streams.windowedTrend(Tables.load(s, dir, "events"), WindowSec)
+        .orderBy(col("window_start"), col("event_type")),
+      s"""WITH e AS (
+           SELECT event_type,
+             time_bucket(INTERVAL '$WindowSec seconds',
+               CAST(ts AS TIMESTAMP)) AS window_start,
+             CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
+               % $WindowSec AS x,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+           FROM events),
+         a AS (
+           SELECT window_start, event_type,
+             CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+             CAST(SUM(x * y) AS BIGINT) AS sxy,
+             CAST(SUM(x * x) AS BIGINT) AS sxx
+           FROM e GROUP BY 1, 2)
+         SELECT window_start, event_type, n,
+           CASE WHEN n * sxx - sx * sx > 0
+             THEN ROUND(CAST(n * sxy - sx * sy AS DOUBLE) /
+               CAST(n * sxx - sx * sx AS DOUBLE), 6)
+             END AS slope_cents_per_sec,
+           ROUND(CAST(sy AS DOUBLE) / CAST(n * 100 AS DOUBLE), 6)
+             AS mean_value
+         FROM a ORDER BY window_start, event_type"""))
 }

@@ -41,4 +41,61 @@ class FixtureStagingSpec extends AnyFunSuite {
         "count — the merge staging regressed to inline retraining")
     spark.catalog.clearCache()
   }
+
+  // Tables.stagedFixtureDir publishes every stored fixture (parquet
+  // frames and the IVF index): staged write, then atomic rename
+  private def fixtureRoot(key: String) = new java.io.File(
+    new java.io.File(sys.props("java.io.tmpdir"), "graft_fixtures"), key)
+
+  private def touch(dir: java.io.File, name: String): Unit = {
+    dir.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(dir, name).toPath, "x")
+  }
+
+  private def withKey(f: String => Unit): Unit = {
+    val key = "staging_spec_" + java.util.UUID.randomUUID()
+    try f(key)
+    finally fixtureRoot(key).getParentFile.listFiles()
+      .filter(_.getName.startsWith(key))
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
+  test("staged fixture: publishes the stage as the root, then reuses it") {
+    withKey { key =>
+      val built = Tables.stagedFixtureDir(key, marker = "_done")(touch(_, "_done"))
+      assert(built == fixtureRoot(key))
+      assert(new java.io.File(built, "_done").exists())
+      val again = Tables.stagedFixtureDir(key, marker = "_done") { _ =>
+        fail("a built fixture must not be rebuilt")
+      }
+      assert(again == built)
+    }
+  }
+
+  test("staged fixture: a lost rename race reads the winner's root") {
+    withKey { key =>
+      var stage: java.io.File = null
+      val got = Tables.stagedFixtureDir(key, marker = "_done") { st =>
+        stage = st
+        touch(st, "_done")
+        touch(fixtureRoot(key), "_done") // another process published first
+      }
+      assert(got == fixtureRoot(key))
+      assert(!stage.exists(), "the losing stage is dropped")
+    }
+  }
+
+  test("staged fixture: a non-race rename failure returns the staged copy") {
+    withKey { key =>
+      val got = Tables.stagedFixtureDir(key, marker = "_done") { st =>
+        touch(st, "_done")
+        // a non-empty root without the marker makes the rename fail
+        // with no published fixture to fall back on
+        touch(fixtureRoot(key), "debris")
+      }
+      assert(got != fixtureRoot(key))
+      assert(new java.io.File(got, "_done").exists(),
+        "the caller must get a directory that holds the fixture")
+    }
+  }
 }

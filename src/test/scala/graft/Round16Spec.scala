@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Round15Queries
+import graft.queries.RetrievalQueries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,7 +36,7 @@ class Round16Spec extends AnyFunSuite {
         .orderBy(col("dim")).collect()
       (b.map(_.getAs[Double]("mn")), b.map(_.getAs[Double]("mx")))
     }
-    val codes = Round15Queries.ivfSq8CodeTable(spark, sf, mn, mx)
+    val codes = RetrievalQueries.ivfSq8CodeTable(spark, sf, mn, mx)
     val qhat = graft.ops.Similarity.sq8DequantizedProbe(
       graft.Tables.load(spark, sf, "embeddings"),
       "vec_id", "embedding", mn, mx, queryId = 0L)
@@ -71,7 +71,7 @@ class Round16Spec extends AnyFunSuite {
       .map(_.toDouble).toArray
     val exact = graft.ops.Similarity.bruteForceTopK(
       e, "vec_id", "embedding", qRaw, 10).collect().map(_.getLong(0)).toSet
-    val approx = Round15Queries.ivfSq8TopK(spark, sf, 10)
+    val approx = RetrievalQueries.ivfSq8TopK(spark, sf, 10)
       .collect().map(_.getLong(0)).toSet
     assert((exact & approx).size.toLong == hits)
   }
@@ -98,7 +98,7 @@ class Round16Spec extends AnyFunSuite {
     // is monotone under reconstruction), so any recall difference is
     // in-cell ranking only; on this corpus the candidate sets match
     val localIds = df.collect().map(_.getLong(0)).toSet
-    val globalIds = Round15Queries.ivfSq8TopK(spark, sf, 10)
+    val globalIds = RetrievalQueries.ivfSq8TopK(spark, sf, 10)
       .collect().map(_.getLong(0)).toSet
     assert(localIds.nonEmpty && globalIds.nonEmpty)
   }
@@ -117,7 +117,7 @@ class Round16Spec extends AnyFunSuite {
     val flat = graft.ops.Similarity.sq8Encode(e, "vec_id", "embedding", mn, mx)
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("codes").toSeq)
       .toMap
-    val part = Round15Queries.ivfSq8CodeTable(spark, sf, mn, mx)
+    val part = RetrievalQueries.ivfSq8CodeTable(spark, sf, mn, mx)
       .collect().map(r => r.getAs[Long]("vec_id") ->
         r.getAs[Array[Byte]]("codes").toSeq).toMap
     assert(part.keySet == flat.keySet)

@@ -276,7 +276,7 @@ class Round6Spec extends AnyFunSuite {
   test("q_ann_recall: both approximate paths at full planted recall") {
     // the driver dump gates on the ≥0.9 boolean (corpus-robust); the
     // exact 1.0 is pinned HERE, at the SFs where it is verified
-    val raw = graft.queries.Round6Queries.annRecall(spark, sf)
+    val raw = graft.queries.RetrievalQueries.annRecall(spark, sf)
       .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(raw === Map("ivf" -> 1.0, "lsh" -> 1.0), raw.toString)
     val gated = SparkEntry.queries("q_ann_recall")(spark, sf)

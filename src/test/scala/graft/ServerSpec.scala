@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
+import java.util.concurrent.ThreadPoolExecutor
+import com.sun.net.httpserver.HttpServer
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the REST surface over a real socket: DDL+DML+query, NL
@@ -148,5 +150,22 @@ class ServerSpec extends AnyFunSuite {
       """{"query":"remove the victims table","isNatural":true,"confirm":true}""")
     assert(r2.body().contains(""""success":true"""), r2.body())
     assert(q("SELECT COUNT(*) FROM victims").statusCode() == 400) // gone
+  }
+
+  test("stop shuts down the request pool") {
+    val s = new Server(new Engine(spark, Files.createTempDirectory("graftstop").toString), 0)
+    s.start()
+    val r = client.send(HttpRequest.newBuilder()
+      .uri(URI.create(s"http://127.0.0.1:${s.boundPort}/api/tables")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    val field = classOf[Server].getDeclaredFields.find(_.getType == classOf[HttpServer]).get
+    field.setAccessible(true)
+    val pool = field.get(s).asInstanceOf[HttpServer].getExecutor
+      .asInstanceOf[ThreadPoolExecutor]
+    assert(pool.getPoolSize > 0)
+    s.stop()
+    assert(pool.isTerminated)
+    assert(pool.getPoolSize == 0)
   }
 }

@@ -29,7 +29,7 @@ class UnpartitionedWindowAuditSpec extends AnyFunSuite {
     // over the |sources| frame (Sampling.scala)
     "q_budget_exact" -> 2,
     // sweep-line day-carry running sum over the per-day total frame
-    // (Round4Queries q_concurrency)
+    // (BehaviorQueries q_concurrency)
     "q_concurrency" -> 1,
     // block-total carry over the blocks frame, rows/blockSize
     // (Packing.scala multi-level prefix scan)

@@ -158,7 +158,7 @@ class VideoFramesSpec extends AnyFunSuite {
       // the delta-2 pairs shift every pixel two palette steps exactly
       if (f % 4 == 2) assert(v.sum_abs_diff === 170L * w * h, s"media $id delta-2")
     }
-    val kf = graft.queries.Round13aQueries.queries("q_video_keyframe")(
+    val kf = SparkEntry.queries("q_video_keyframe")(
       spark, "/root/testdata/sf0.001").collect()
     kf.foreach { r =>
       val id = r.getLong(0)
@@ -193,7 +193,7 @@ class VideoFramesSpec extends AnyFunSuite {
 
   test("frame-caption alignment: covered and uncaptioned frames both accounted") {
     import org.apache.spark.sql.functions._
-    val df = graft.queries.Round13aQueries.queries("q_video_captions")(
+    val df = SparkEntry.queries("q_video_captions")(
       spark, "/root/testdata/sf0.001").collect()
     assert(df.nonEmpty)
     df.foreach { r =>
@@ -216,7 +216,7 @@ class VideoFramesSpec extends AnyFunSuite {
 
   test("q_video_frames corruption rows pin to the planted 1/97") {
     import org.apache.spark.sql.functions._
-    val df = graft.queries.Round13aQueries.queries("q_video_frames")(
+    val df = SparkEntry.queries("q_video_frames")(
       spark, "/root/testdata/sf0.001")
     val flagged = df.filter(!col("decode_ok")).count()
     val expected = docs.filter(col("doc_id") % 97 === 0).count()
