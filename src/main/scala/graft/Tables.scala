@@ -5,7 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Table loading for the driver-provided testdata layout
   * (`TESTDATA.md`): one parquet file per table under a scale-factor
   * directory. At 100 TB each table would be a partitioned parquet
-  * dataset; `spark.read.parquet(dir)` handles both layouts.
+  * dataset; [[parquet]] handles both layouts. Every query-side parquet
+  * read goes through [[parquet]], so a table whose files have not
+  * changed has its footer schema inferred once per process.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,16 +17,25 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir) else spark.read.parquet(path(dir, name))
+    if (name == "events") loadEvents(spark, dir) else parquet(spark, path(dir, name))
+
+  /** A parquet read through the process-wide schema registry
+    * ([[ParquetSchemas.read]]): the footer schema is inferred once per
+    * unchanged set of files, not once per read. `ops/` code, which may
+    * not reference this loading layer, calls the registry directly.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    ParquetSchemas.read(spark, path)
 
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (rounds
     * ≤7), which Spark's vectorized reader rejects without the legacy
     * nanos-as-long conf, and TIMESTAMP(MICROS) (round 8 regeneration).
     * Handle both: set the legacy conf (a no-op for micros files), then
-    * branch on the type that actually materialized. Nanos convert with
-    * integer division — going through a double would lose precision at
-    * ~1.7e18 ns; DuckDB's CAST(ts AS TIMESTAMP) truncates ns→us the
-    * same way. Micros (TIMESTAMP_NTZ in Spark 4) cast to session-tz
+    * branch on the type that actually materialized. The conf is part of
+    * the [[parquet]] schema key, so a schema inferred without it is
+    * never reused here. Nanos convert with integer division — going
+    * through a double would lose precision at ~1.7e18 ns; DuckDB's
+    * CAST(ts AS TIMESTAMP) truncates ns→us the same way. Micros (TIMESTAMP_NTZ in Spark 4) cast to session-tz
     * TimestampType, a no-shift rename under the UTC session the
     * engine pins everywhere, keeping every downstream comparison and
     * window identical across both layouts.
@@ -32,7 +43,7 @@ object Tables {
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path(dir, "events"))
+    val raw = parquet(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -125,7 +136,7 @@ object Tables {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(stage.toString)
     }
-    spark.read.parquet(path.toString)
+    parquet(spark, path.toString)
   }
 
   /** The build-once directory `key` under the fixture root. `write`

@@ -74,10 +74,26 @@ object Behavior {
       .groupBy(col("user_id"))
       .agg(max(col("es")).as("last_es"), count(lit(1)).as("n_events"),
         sum(col("cents")).as("cents"))
-    exactTile(exactTile(exactTile(per,
-        col("last_es"), buckets, "r"),
-        col("n_events"), buckets, "f"),
-        col("cents"), buckets, "m")
+    // The three cut-point sets and N come from ONE aggregate over
+    // `per`: each tile's metric passes through the nesting unchanged,
+    // N is the same at every level, and the cuts shape only bucket
+    // balance, never the tile (see exactTile). They are pinned as
+    // literals (same reasoning as Layout.orderStats): percentile_approx
+    // is merge-order-sensitive and each cut array fans out to a
+    // histogram and a rank path, so it must be evaluated exactly once.
+    // Accuracy 100, not 1000: the cuts never decide a tile, and 1000
+    // made this head() the dominant single-task job of q_rfm.
+    val nRough = 64
+    val probs = array((1 until nRough).map(i => lit(i.toDouble / nRough)): _*)
+    val tiles = Seq("last_es" -> "r", "n_events" -> "f", "cents" -> "m")
+    val cutsRow = per.agg(count(lit(1)), tiles.map { case (metric, _) =>
+      percentile_approx(col(metric).cast("double"), probs, lit(100)) }: _*).head()
+    val nTotal = cutsRow.getLong(0)
+    tiles.zipWithIndex.foldLeft(per) { case (df, ((metric, outCol), i)) =>
+      val cutVals =
+        if (cutsRow.isNullAt(i + 1)) Seq.empty[Double] else cutsRow.getSeq[Double](i + 1)
+      exactTile(df, col(metric), cutVals, nTotal, buckets, outCol)
+    }
       .withColumn("segment", concat_ws("-", col("r"), col("f"), col("m")))
   }
 
@@ -93,25 +109,9 @@ object Behavior {
     * the rest ⌊N/k⌋ — integer-exact, so the result is the window
     * function's value for value.
     */
-  private def exactTile(df: DataFrame, metric: Column, buckets: Int,
-      outCol: String): DataFrame = {
+  private def exactTile(df: DataFrame, metric: Column, cutVals: Seq[Double],
+      nTotal: Long, buckets: Int, outCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nRough = 64
-    // cuts + N are pinned as literals (same reasoning as
-    // Layout.orderStats): percentile_approx is merge-order-sensitive
-    // and `b` fans out to the histogram and the rank path, so the cut
-    // array must be evaluated exactly once.
-    // accuracy 100 (r16): cuts shape only bucket balance, never the
-    // tile assignment — the exact histogram + per-bucket ranks below
-    // reconstruct exact global ranks under ANY cut set (same invariant
-    // as Layout.orderStats) — and accuracy 1000 made this head() the
-    // dominant single-task job in each of q_rfm's three nested tiles.
-    val cutsRow = df.agg(percentile_approx(metric.cast("double"),
-      array((1 until nRough).map(i => lit(i.toDouble / nRough)): _*),
-      lit(100)).as("_cuts"), count(lit(1)).as("_N")).head()
-    val cutVals: Seq[Double] =
-      if (cutsRow.isNullAt(0)) Seq.empty else cutsRow.getSeq[Double](0)
-    val nTotal = cutsRow.getLong(1)
     // codegen'd CutBucket binary search instead of an interpreted HOF
     // fold — same rationale and identical semantics as Layout.orderStats
     val b = df
@@ -138,7 +138,7 @@ object Behavior {
           .otherwise(rem + floor((r - big + q - 1L).cast("double") /
             greatest(q, lit(1L)).cast("double")))
           .cast("int"))
-      .drop("_b", "_off", "_r", "_cuts", "_N")
+      .drop("_b", "_off", "_r", "_N")
   }
 
   /** Exponentially time-decayed per-user value — the recency-weighted

@@ -2498,6 +2498,13 @@ object Multimodal {
   private def ascii(s: String): Column =
     unhex(lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString))
 
+  /** Version of the [[syntheticMediaHeaders]] generation rule. A stored
+    * payload fixture keys on it, so a change to the rule must bump it or
+    * the fixture would serve payloads of the old rule; a spec pins the
+    * rule's output per version, so a change without a bump fails there.
+    */
+  val syntheticMediaHeadersVersion: Int = 1
+
   /** Synthesize payloads with REAL format headers, fields derived from
     * the id (so an oracle can predict every parsed value from the
     * generation rule alone): PNG (signature + IHDR with width/height),

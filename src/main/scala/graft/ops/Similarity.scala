@@ -526,7 +526,7 @@ object Similarity {
   def updateIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String): Long = {
     val centroids = loadIvfCentroids(path)
-    val existing = spark.read.parquet(path).select(col(idCol))
+    val existing = graft.ParquetSchemas.read(spark, path).select(col(idCol))
     val fresh = withIvfCid(batch, vecCol, centroids, "ivf_cid")
       .join(existing, Seq(idCol), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -554,7 +554,7 @@ object Similarity {
       nProbe: Int = 4): DataFrame = {
     val centroids = loadIvfCentroids(path)
     val probed = nearestCentroids(centroids, query, nProbe)
-    spark.read.parquet(path)
+    graft.ParquetSchemas.read(spark, path)
       .filter(col("ivf_cid").isin(probed.toIndexedSeq: _*))
       .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("sim"))
       .orderBy(col("sim").desc, col(idCol))

@@ -22,10 +22,13 @@ object MediaQueries {
     * 0.53 s gap vs 0.05 s of execution). The fixture is a
     * deterministic function of documents.doc_id; the oracle is
     * unchanged — it predicts the PARSE result from the generation
-    * rule, so a misparse (or a stale fixture) still fails the hash.
+    * rule, so a misparse (or a stale fixture) still fails the hash. The
+    * fixture key carries the rule's version, so a changed rule builds
+    * a new fixture instead of reading the old rule's payloads.
     */
   private def mediaPayloads(s: SparkSession, dir: String): DataFrame =
-    Tables.storedFixture(s, dir, "media_payloads_v1")(
+    Tables.storedFixture(s, dir,
+        s"media_payloads_v${Multimodal.syntheticMediaHeadersVersion}")(
       Multimodal.syntheticMediaHeaders(
         Tables.load(s, dir, "documents"), "doc_id"))
 

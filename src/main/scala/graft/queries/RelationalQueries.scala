@@ -1774,15 +1774,18 @@ object RelationalQueries {
       // total re-aggregates the per-part DECIMAL partials — decimal
       // addition is exact and associative, so sum-of-sums equals the
       // direct decimal sum bit-for-bit (both only cast to double at the
-      // end), and np is exactly the per-part row count. The scan is
-      // spread (loadSpread) because the decimal partial agg is
-      // CPU-bound on the single-split testdata scan (the q_corr_matrix
-      // precedent; decimal sums commute, so results are identical).
+      // end), and np counts the non-null part keys, which is
+      // COUNT(DISTINCT l_partkey): the groupBy keeps a NULL key as its
+      // own group, and count(col) skips it where count(1) would not.
+      // The scan is spread (loadSpread) because the decimal partial agg
+      // is CPU-bound on the single-split testdata scan (the
+      // q_corr_matrix precedent; decimal sums commute, so results are
+      // identical).
       val pvd = Tables.loadSpread(s, dir, "lineitem", "l_partkey")
         .groupBy(col("l_partkey")).agg(sum(term).as("vdec"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val tot = pvd.agg(sum(col("vdec")).cast("double").as("t"),
-        count(lit(1)).as("np"))
+        count(col("l_partkey")).as("np"))
       pvd.select(col("l_partkey"), col("vdec").cast("double").as("value"))
         .crossJoin(broadcast(tot))
         .filter(col("value") > lit(1.2) * (col("t") / col("np")))

@@ -1339,7 +1339,7 @@ object RetrievalQueries {
       // is stable
       Similarity.updateIvfIndex(s, path,
         quantized(s, dir).filter(col("vec_id") % 10 === 0), "vec_id", "vq")
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy(col("ivf_cid"))
         .agg(countDistinct(col("vec_id")).as("n_ids"))
         .orderBy(col("ivf_cid"))

@@ -201,4 +201,29 @@ class PlanSpec extends AnyFunSuite {
     assert(finalTree.contains("TakeOrderedAndProject"), finalTree)
     assert(!finalTree.contains("CartesianProduct"), finalTree)
   }
+
+  // The plan-build job floor: the jobs a query's build function
+  // launches before its action. Parquet schemas come from the
+  // ParquetSchemas registry after the first build, so a relational or
+  // dialect query builds with no job at all, and q_rfm runs exactly its
+  // one cut-point aggregate. Value: the SQL executions the build runs;
+  // no build may launch a job outside a SQL execution.
+  private val buildFloors = Seq(
+    "q_rfm" -> 1,
+    "q_tpch_q5" -> 0,
+    "q_dialect_where" -> 0)
+
+  test("plan build launches only the pinned side jobs once schemas are known") {
+    def build(name: String): JobCount =
+      JobCount.of(spark)(SparkEntry.queries(name)(spark, sf))
+    buildFloors.foreach { case (name, _) => build(name) } // warm-up
+    buildFloors.foreach { case (name, executions) =>
+      val got = build(name)
+      assert(got.outsideSql == 0,
+        s"$name: plan build launched ${got.outsideSql} jobs outside a SQL execution " +
+          s"(schema inference?), got $got")
+      assert(got.sqlExecutions == executions,
+        s"$name: plan build ran ${got.sqlExecutions} SQL executions, pinned $executions ($got)")
+    }
+  }
 }

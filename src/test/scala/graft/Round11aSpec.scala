@@ -218,6 +218,25 @@ class Round11aSpec extends AnyFunSuite {
     }
   }
 
+  test("the media generation rule's output is pinned per rule version") {
+    // the stored payload fixture keys on syntheticMediaHeadersVersion;
+    // a rule change that does not bump it would serve stale payloads,
+    // so it fails here instead: bump the version and pin the new digest
+    val pinned = Map(1 -> "b6d9704104f16cdf68fde7c3f01090b2595bd434497dc150aa0f58c73b2e9040")
+    val payloads = Multimodal.syntheticMediaHeaders(
+        spark.range(0, 500).toDF("doc_id"), "doc_id")
+      .orderBy("media_id").collect()
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    payloads.foreach { r =>
+      md.update(java.nio.ByteBuffer.allocate(8).putLong(r.getLong(0)).array())
+      md.update(r.getAs[Array[Byte]]("payload"))
+    }
+    val digest = md.digest().map("%02x".format(_)).mkString
+    val version = Multimodal.syntheticMediaHeadersVersion
+    assert(pinned.get(version).contains(digest),
+      s"rule version $version produces $digest; bump the version if the rule changed")
+  }
+
   test("payloads too short to hold any header flag as unparsed, not an error") {
     val r = parse1(Array[Byte](1, 2, 3))
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(3))

@@ -62,6 +62,24 @@ class Round6Spec extends AnyFunSuite {
     assert(p.contains("EqualTo(l_returnflag,R)"), p)
   }
 
+  test("q_tpch_q11: a NULL l_partkey row counts in the total, not in np") {
+    import spark.implicits._
+    // per-part values 50, 10, 70 and a NULL-key value 20: t = 150 and
+    // np = COUNT(DISTINCT l_partkey) = 3, so the cut is 1.2 × 50 = 60
+    // and only part 3 passes; counting the NULL group as a part would
+    // lower the cut to 45 and let part 1 through
+    val dir = java.nio.file.Files.createTempDirectory("graft_q11_null").toFile
+    try {
+      Seq[(Option[Long], Double, Double)]((Some(1L), 30.0, 0.0), (Some(1L), 20.0, 0.0),
+          (Some(2L), 10.0, 0.0), (Some(3L), 70.0, 0.0), (None, 20.0, 0.0))
+        .toDF("l_partkey", "l_extendedprice", "l_discount")
+        .write.parquet(Tables.path(dir.getAbsolutePath, "lineitem"))
+      val got = SparkEntry.queries("q_tpch_q11")(spark, dir.getAbsolutePath)
+        .as[(Option[Long], Double)].collect().toSeq
+      assert(got == Seq((Some(3L), 70.0)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   test("q_tpch_q13: orders aggregate before the outer join, bounded shuffles") {
     val p = plan("q_tpch_q13")
     val finalTree = p.split("== Initial Plan ==").head

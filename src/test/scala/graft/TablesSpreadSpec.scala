@@ -32,15 +32,22 @@ class TablesSpreadSpec extends AnyFunSuite {
       // a multi-file copy of the documents table; tiny files would
       // normally pack into one split (openCost 4 MB), so pin the
       // split params to make the scan genuinely multi-split — the
-      // stand-in for a 100 TB table's thousands of natural splits
+      // stand-in for a 100 TB table's thousands of natural splits.
+      // A split holds at most maxPartitionBytes, so a cap of
+      // total / (2 × target) yields at least 2 × target splits
+      // whatever the file sizes and the core count.
       Tables.load(spark, sf, "documents")
         .repartition(8).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+      val written = new java.io.File(s"$dir/documents.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      val target = spark.sparkContext.defaultParallelism
+      spark.conf.set("spark.sql.files.maxPartitionBytes",
+        math.max(1L, written / (2L * target)).toString)
       spark.conf.set("spark.sql.files.openCostInBytes", "0")
       val plain = Tables.load(spark, dir, "documents")
       val n = plain.rdd.getNumPartitions
-      assert(n >= spark.sparkContext.defaultParallelism,
+      assert(n >= target,
         s"probe setup: expected a multi-split scan, got $n partitions")
       val spread = Tables.loadSpread(spark, dir, "documents", "doc_id")
       assert(spread.rdd.getNumPartitions == n,
