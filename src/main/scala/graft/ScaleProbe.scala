@@ -396,9 +396,8 @@ object ScaleProbe {
         "doc_id", "text", n = 5).count()
     }
     time("hybrid retrieval (BM25 x cosine, RRF) over 10x docs + 20k vectors") {
-      val q = Tables.load(spark, out, "embeddings")
-        .filter(col("vec_id") === 0).select(col("embedding"))
-        .head().getSeq[Float](0).map(_.toDouble).toArray
+      val q = graft.ops.Similarity.vectorOf(
+        Tables.load(spark, out, "embeddings"), "vec_id", "embedding", 0L)
       graft.ops.Search.hybridSearch(docs, "doc_id", "text",
         Seq("spark", "query", "join", "filter"),
         Tables.load(spark, out, "embeddings"), "vec_id", "embedding",

@@ -20,9 +20,7 @@ object Similarity {
   import graft.functions.VectorExpressions
 
   /** Dot product of two array columns, accumulated in double. */
-  def dot(a: Column, b: Column): Column = VectorExpressions.dot_product(a, b)
-
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
+  private def dot(a: Column, b: Column): Column = VectorExpressions.dot_product(a, b)
 
   /** Cosine similarity, 0 when either vector is all-zero. */
   def cosine(a: Column, b: Column): Column = VectorExpressions.cosine_sim(a, b)
@@ -30,48 +28,95 @@ object Similarity {
   /** Deterministic pseudo-random unit-ish hyperplanes (fixed seed so
     * signatures are stable across runs and cluster restarts).
     */
-  def hyperplanes(nBits: Int, dims: Int, seed: Long = 42L): Seq[Array[Double]] = {
+  private def hyperplanes(nBits: Int, dims: Int, seed: Long = 42L): Seq[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(nBits)(Array.fill(dims)(rnd.nextGaussian()))
   }
 
   /** n-bit signature of a vector column: bit i = sign(v · plane_i). */
-  def signature(v: Column, planes: Seq[Array[Double]]): Column =
+  private def signature(v: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       when(dot(v, typedlit(p)) >= 0.0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  /** Scalar int8 quantization (SQ8) + top-k: the embedding-STORAGE
-    * technique at 100 TB (4x smaller than float32). Per-DIMENSION
-    * global [min, max] bounds map each value to
-    * floor((x-mn)*255/(mx-mn) + 0.5) in 0..255 — `floor(u + 0.5)`
-    * explicitly, never a round() builtin, because IEEE double
-    * subtract/multiply/divide are bit-defined across engines while
-    * round-half tie policies are not, so the DuckDB oracle replays
-    * the codes exactly. Ranking DEQUANTIZES (xhat = mn + c*(mx-mn)/255)
-    * and uses reconstructed cosine: raw code dot products are a BIASED
-    * similarity under the affine map (the per-dim offsets leak into
-    * every dot — measured: a noisy copy outranks the probe itself), so
-    * real SQ8 retrieval reconstructs before scoring. All per-vector
-    * arithmetic stays in ARRAY order (transform + the codegen'd
-    * cosine expression), the cross-engine-deterministic accumulation
-    * the q_ann_topk oracle already proves out.
-    *
-    * Scale shape: bounds are one |dims|-group aggregate collected as
-    * the |dims|-row parameterization of the scoring expression (the
-    * PQ-codebook precedent; at scale bounds are training-time state
-    * stored with the code table, and codes are written once at
-    * ingest). Query-time work is one scan with a per-row array
-    * transform + TakeOrdered — no join, no shuffle of the table. A
-    * constant dimension (mx == mn) reconstructs to mn for every
-    * vector — it carries no ranking information either way.
+  /** The vector of row `id` as doubles: the 1-row probe lookup that
+    * parameterizes a retrieval plan with its query literal. Fails
+    * naming the column and the id when no row carries that id.
     */
-  def sq8TopK(df: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int): DataFrame = {
-    val bounds = sq8Bounds(df, vecCol).orderBy(col("dim")).collect()
-    sq8TopKFromBounds(df, idCol, vecCol,
-      bounds.map(_.getDouble(1)), bounds.map(_.getDouble(2)), queryId, k)
+  def vectorOf(df: DataFrame, idCol: String, vecCol: String, id: Long): Array[Double] =
+    df.filter(col(idCol) === id).select(col(vecCol).cast("array<double>"))
+      .head(1).headOption.map(_.getSeq[Double](0).toArray)
+      .getOrElse(throw new NoSuchElementException(
+        s"vectorOf: no row with $idCol = $id to read $vecCol from"))
+
+  /** The ranked top-k tail every retrieval family ends in: `score`
+    * (named `name`) per id, best first — descending for similarities,
+    * ascending for distances — ties broken by ascending id, first k.
+    * Compiles to scan → project → TakeOrderedAndProject: no global
+    * sort, no shuffle of the table.
+    */
+  private def rankTopK(rows: DataFrame, idCol: String, score: Column,
+      name: String, desc: Boolean, k: Int): DataFrame =
+    rows.select(col(idCol), score.as(name))
+      .orderBy(if (desc) col(name).desc else col(name), col(idCol))
+      .limit(k)
+
+  /** [[rankTopK]] by similarity, rounded to 6 dp after the cut: the
+    * selection sees raw scores, the output the presentation value.
+    */
+  private def roundedTopK(rows: DataFrame, idCol: String, sim: Column,
+      k: Int): DataFrame =
+    rankTopK(rows, idCol, sim, "_sim", desc = true, k)
+      .select(col(idCol), round(col("_sim"), 6).as("sim"))
+
+  /** recall@k of an approximate top-k against the exact one: a single
+    * (k, n_hits, recall) row, where n_hits counts the rows the two
+    * share (joined on every column of `exact`) and recall = n_hits / k
+    * to 6 dp. Both rankings break ties by id, so both sets are
+    * engine-exact and a DuckDB oracle replays the row.
+    */
+  def recallAtK(exact: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    exact.join(approx, exact.columns.toSeq)
+      .agg(count(lit(1)).as("n_hits"))
+      .select(lit(k).as("k"), col("n_hits"),
+        round(col("n_hits").cast("double") / lit(k.toDouble), 6).as("recall"))
+
+  /** Grouped recall@k: `approx` labels each ranked row with `groupCol`
+    * and holds `queries` rankings per group (keyed by the columns it
+    * shares with `exact`). One (groupCol, k, n_hits, recall) row per
+    * entry of `groups`, recall = n_hits / (k · queries) to 6 dp; a
+    * group with no hit keeps its row with n_hits 0 (left join), so the
+    * output is total.
+    */
+  def recallAtK(exact: DataFrame, approx: DataFrame, k: Int,
+      groupCol: String, groups: Seq[String], queries: Int): DataFrame = {
+    val hits = exact.join(approx, exact.columns.toSeq)
+      .groupBy(col(groupCol)).agg(count(lit(1)).as("_h"))
+    val spark = exact.sparkSession
+    import spark.implicits._
+    val n = coalesce(col("_h"), lit(0L))
+    groups.toDF(groupCol).join(hits, Seq(groupCol), "left")
+      .select(col(groupCol), lit(k).as("k"), n.as("n_hits"),
+        round(n.cast("double") / lit(k.toDouble * queries), 6).as("recall"))
   }
+
+  /* Scalar int8 quantization (SQ8): the embedding-STORAGE technique at
+   * 100 TB (4x smaller than float32). Per-DIMENSION global [min, max]
+   * bounds map each value to floor((x-mn)*255/(mx-mn) + 0.5) in
+   * 0..255 — `floor(u + 0.5)` explicitly, never a round() builtin,
+   * because IEEE double subtract/multiply/divide are bit-defined across
+   * engines while round-half tie policies are not, so the DuckDB oracle
+   * replays the codes exactly. Ranking DEQUANTIZES (xhat = mn +
+   * c*(mx-mn)/255) and uses reconstructed cosine: raw code dot products
+   * are a BIASED similarity under the affine map (the per-dim offsets
+   * leak into every dot — measured: a noisy copy outranks the probe
+   * itself), so real SQ8 retrieval reconstructs before scoring. All
+   * per-vector arithmetic stays in ARRAY order (transform + the
+   * codegen'd cosine expression), the cross-engine-deterministic
+   * accumulation the q_ann_topk oracle already proves out. A constant
+   * dimension (mx == mn) reconstructs to mn for every vector — it
+   * carries no ranking information either way.
+   */
 
   /** Per-dimension global [min, max] bounds over an embedding column —
     * SQ8's TRAINING-time state: one |dims|-group aggregate over the
@@ -89,12 +134,10 @@ object Similarity {
     * shape: the |dims|-row bounds parameterize the scoring expression,
     * and the query-time plan is ONE scan with a per-row array
     * transform + TakeOrdered. No bounds aggregate, no join, no shuffle
-    * of the table. The only driver read is the 1-row probe lookup
-    * (the queryVec precedent).
+    * of the table. The only driver read is the 1-row probe lookup.
     */
   def sq8TopKFromBounds(df: DataFrame, idCol: String, vecCol: String,
       mn: Array[Double], mx: Array[Double], queryId: Long, k: Int): DataFrame = {
-    val widened = Dedup.widen(df)
     val mnL = typedlit(mn); val mxL = typedlit(mx)
     def dequantized(v: Column): Column = transform(v, (x, i) => {
       val m = element_at(mnL, i + 1); val big = element_at(mxL, i + 1)
@@ -105,30 +148,23 @@ object Similarity {
         .otherwise(m)
     })
     val qhat = sq8DequantizedProbe(df, idCol, vecCol, mn, mx, queryId)
-    val sim = cosine(dequantized(col(vecCol)), typedlit(qhat))
-    widened.select(col(idCol), sim.as("_sim"))
-      .orderBy(col("_sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), round(col("_sim"), 6).as("sim"))
+    roundedTopK(Dedup.widen(df), idCol,
+      cosine(dequantized(col(vecCol)), typedlit(qhat)), k)
   }
 
   /** The probe's reconstructed (quantize -> dequantize) vector,
-    * computed with the SAME IEEE double formula on the driver — a
-    * 1-row parameterization, the queryVec precedent.
+    * computed with the SAME IEEE double formula on the driver from the
+    * [[vectorOf]] lookup.
     */
   def sq8DequantizedProbe(df: DataFrame, idCol: String, vecCol: String,
-      mn: Array[Double], mx: Array[Double], queryId: Long): Array[Double] = {
-    val qRow = df.filter(col(idCol) === queryId)
-      .select(col(vecCol)).head().getSeq[Float](0).toArray
-    qRow.zipWithIndex.map { case (x0, i) =>
-      val x = x0.toDouble
+      mn: Array[Double], mx: Array[Double], queryId: Long): Array[Double] =
+    vectorOf(df, idCol, vecCol, queryId).zipWithIndex.map { case (x, i) =>
       if (mx(i) > mn(i)) {
         val c = math.min(math.max(
           math.floor((x - mn(i)) * 255.0 / (mx(i) - mn(i)) + 0.5), 0.0), 255.0)
         mn(i) + c * (mx(i) - mn(i)) / 255.0
       } else mn(i)
     }
-  }
 
   /** SQ8 ENCODE: the int8 code table itself — (id, codes BINARY, one
     * byte per dimension), the 4x-compressed storage format written
@@ -151,36 +187,21 @@ object Similarity {
     */
   def sq8TopKFromCodes(codes: DataFrame, idCol: String, codesCol: String,
       mn: Array[Double], mx: Array[Double], qhat: Array[Double],
-      k: Int): DataFrame = {
-    val sim = VectorExpressions.sq8_cosine_to_query(
-      col(codesCol), mn, mx, qhat)
-    Dedup.widen(codes).select(col(idCol), sim.as("_sim"))
-      .orderBy(col("_sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), round(col("_sim"), 6).as("sim"))
-  }
+      k: Int): DataFrame =
+    roundedTopK(Dedup.widen(codes), idCol,
+      VectorExpressions.sq8_cosine_to_query(col(codesCol), mn, mx, qhat), k)
 
-  /** Recall@k of the SQ8 dequantized-cosine ranking against the exact
-    * float-cosine ranking — q_pq_recall's shape for the SQ8 family
-    * member: both top-k sets are computed scan+TakeOrdered, the
-    * overlap is one k-row join, and the output is a single
-    * (k, n_hits, recall) row. Ties break by id in both rankings, so
-    * the sets are engine-exact and a DuckDB oracle replays them.
+  /** [[recallAtK]] of the SQ8 dequantized-cosine ranking against the
+    * exact float-cosine ranking: the RAW probe drives the exact side,
+    * its QUANTIZED form the SQ8 side.
     */
   def sq8Recall(df: DataFrame, idCol: String, vecCol: String,
-      mn: Array[Double], mx: Array[Double], queryId: Long, k: Int): DataFrame = {
-    // 1-row probe lookup (the queryVec precedent): the RAW float query
-    // drives the exact ranking; its QUANTIZED form drives the SQ8 one
-    val qRaw = df.filter(col(idCol) === queryId)
-      .select(col(vecCol)).head().getSeq[Float](0).map(_.toDouble).toArray
-    val exact = bruteForceTopK(df, idCol, vecCol, qRaw, k).select(col(idCol))
-    val approx = sq8TopKFromBounds(df, idCol, vecCol, mn, mx, queryId, k)
-      .select(col(idCol))
-    exact.join(approx, Seq(idCol))
-      .agg(count(lit(1)).as("n_hits"))
-      .select(lit(k).as("k"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(k.toDouble), 6).as("recall"))
-  }
+      mn: Array[Double], mx: Array[Double], queryId: Long, k: Int): DataFrame =
+    recallAtK(
+      bruteForceTopK(df, idCol, vecCol, vectorOf(df, idCol, vecCol, queryId), k)
+        .select(col(idCol)),
+      sq8TopKFromBounds(df, idCol, vecCol, mn, mx, queryId, k).select(col(idCol)),
+      k)
 
   /** Per-CELL per-dimension [min, max] bounds — LOCAL scalar
     * quantization, the IVFADC idea (quantize within the coarse cell,
@@ -224,103 +245,81 @@ object Similarity {
     */
   def sq8LocalTopKFromCodes(codes: DataFrame, idCol: String,
       codesCol: String, cellCol: String, cellBounds: DataFrame,
-      qRaw: Array[Double], k: Int): DataFrame = {
-    val sim = VectorExpressions.sq8_cosine_to_query_cols(
-      col(codesCol), col("mns"), col("mxs"), qRaw.toSeq)
-    Dedup.widen(codes).join(broadcast(cellBounds), Seq(cellCol))
-      .select(col(idCol), sim.as("_sim"))
-      .orderBy(col("_sim").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), round(col("_sim"), 6).as("sim"))
-  }
+      qRaw: Array[Double], k: Int): DataFrame =
+    roundedTopK(Dedup.widen(codes).join(broadcast(cellBounds), Seq(cellCol)),
+      idCol, VectorExpressions.sq8_cosine_to_query_cols(
+        col(codesCol), col("mns"), col("mxs"), qRaw.toSeq), k)
 
-  /** Brute-force cosine top-k against a literal query vector. Compiles
-    * to scan → project → TakeOrderedAndProject: no global sort, no
-    * shuffle of the table.
+  /** Brute-force cosine top-k against a literal query vector: the
+    * exact re-rank every approximate family runs over its candidates
+    * (`df` is then the candidate frame), and the exact side of every
+    * recall row.
     */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Array[Double], k: Int): DataFrame =
-    df.select(col(idCol), cosine(col(vecCol), typedlit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    rankTopK(df, idCol, cosine(col(vecCol), typedlit(query)), "sim", desc = true, k)
 
   /** LSH-bucketed approximate top-k: probe the query's signature bucket
     * plus all Hamming-distance-1 buckets (multiprobe), brute-force only
     * within candidates. On a partitioned-by-signature table this reads
-    * a tiny fraction of rows; recall is tunable via nBits/probes.
+    * a tiny fraction of rows; recall is tunable via nBits/probes. The
+    * hyperplanes span all `query.length` dimensions.
     */
   def annTopK(df: DataFrame, idCol: String, vecCol: String,
-      query: Array[Double], k: Int, nBits: Int = 12, dims: Int = 64): DataFrame = {
-    val planes = hyperplanes(nBits, dims)
+      query: Array[Double], k: Int, nBits: Int = 12): DataFrame = {
+    val planes = hyperplanes(nBits, query.length)
     val qSig = planes.zipWithIndex.map { case (p, i) =>
       val d = p.zip(query).map { case (x, y) => x * y }.sum
       if (d >= 0.0) 1L << i else 0L
     }.reduce(_ | _)
     val probeSigs = qSig +: (0 until nBits).map(i => qSig ^ (1L << i))
-    Dedup.widen(df).withColumn("lsh_sig", signature(col(vecCol), planes))
-      .filter(col("lsh_sig").isin(probeSigs: _*))
-      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    bruteForceTopK(Dedup.widen(df).withColumn("lsh_sig", signature(col(vecCol), planes))
+      .filter(col("lsh_sig").isin(probeSigs: _*)), idCol, vecCol, query, k)
   }
 
   // ---- IVF (inverted-file) index: the partition-pruned ANN scale path ----
 
-  /** Coarse IVF centroids: a deterministic hash-ordered seed sample
-    * refined with `lloydIters` distributed Lloyd steps. Each step is
-    * one assignment pass (nCentroids codegen'd cosines per row) plus
-    * one per-dimension mean — computed distributed via explode +
-    * groupBy(cid, dim), then collected (nCentroids × dims values, tiny).
+  /** The one Lloyd core, behind the coarse IVF centroids and
+    * [[clusterEmbeddings]]: `init` (or, without it, the deterministic
+    * sample of the first n rows by xxhash64(id)) refined by `iters`
+    * distributed steps. Each step is
+    * one assignment pass (n codegen'd cosines per row) plus one
+    * per-dimension mean — explode + groupBy(cid, dim), then collected
+    * (n × dims values, tiny). Empty cells keep their previous centroid.
+    * The iters + 1 passes read one persisted (vector, hash) projection
+    * (a few doubles per row; at 100 TB run this on a sample).
     */
-  def ivfCentroids(df: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int, lloydIters: Int = 2): Array[Array[Double]] = {
-    require(nCentroids > 0, "need nCentroids > 0")
-    // lloydIters + 1 passes read the same projection: cache it (a few
-    // doubles per row; at 100 TB run this on a sample, not the corpus).
+  private def lloyd(df: DataFrame, idCol: String, vecCol: String, n: Int,
+      iters: Int, init: Option[Array[Array[Double]]]): Array[Array[Double]] = {
+    require(n > 0, "need at least one centroid")
     val vecs = df
       .select(col(vecCol).cast("array<double>").as("v"), xxhash64(col(idCol)).as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val seeds: Array[Array[Double]] = vecs
-        .orderBy(col("h")).limit(nCentroids)
-        .collect().map(_.getSeq[Double](0).toArray)
-      lloydRefine(vecs.select(col("v")), seeds, lloydIters)
+      var centroids = init.getOrElse(vecs.orderBy(col("h")).limit(n)
+        .collect().map(_.getSeq[Double](0).toArray))
+      for (_ <- 0 until iters) {
+        val byCid = withIvfCid(vecs.select(col("v")), "v", centroids, "cid")
+          .select(col("cid"), posexplode(col("v")))
+          .groupBy(col("cid"), col("pos"))
+          .agg(avg(col("col")).as("m"))
+          .collect().groupBy(_.getInt(0))
+        centroids = centroids.indices.map { c =>
+          byCid.get(c) match {
+            case Some(rows) =>
+              rows.map(r => r.getInt(1) -> r.getDouble(2)).sortBy(_._1).map(_._2)
+            case None => centroids(c) // empty cell keeps its seed
+          }
+        }.toArray
+      }
+      centroids
     } finally vecs.unpersist(blocking = false)
   }
 
-  /** `iters` distributed Lloyd steps from `init`: one assignment pass
-    * (nCentroids codegen'd cosines per row) plus one per-dimension mean
-    * per step — computed distributed via explode + groupBy(cid, dim),
-    * then collected (nCentroids × dims values, tiny). Empty cells keep
-    * their previous centroid.
-    */
-  private def lloydRefine(vecs: DataFrame, init: Array[Array[Double]],
-      iters: Int): Array[Array[Double]] = {
-    var centroids = init
-    for (_ <- 0 until iters) {
-      val assigned = withIvfCid(vecs, "v", centroids, "cid")
-      val means = assigned
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("col")).as("m"))
-        .collect()
-      val byCid = means.groupBy(_.getInt(0))
-      centroids = centroids.indices.map { c =>
-        byCid.get(c) match {
-          case Some(rows) =>
-            val dims = rows.map(r => r.getInt(1) -> r.getDouble(2)).sortBy(_._1)
-            dims.map(_._2).toArray
-          case None => centroids(c) // empty cell keeps its seed
-        }
-      }.toArray
-    }
-    centroids
-  }
-
-  /** First-class embedding k-means (r7 verdict item 6): Lloyd
-    * clustering exposed as a frame — (id, cid, cos_to_centroid) — not
-    * just the IVF internals. Seeding is the same deterministic
-    * hash-ordered sample as [[ivfCentroids]] unless explicit `init`
+  /** First-class embedding k-means: Lloyd clustering exposed as a
+    * frame — (id, cid, cos_to_centroid) — not just the IVF internals.
+    * Seeding is the same deterministic hash-ordered sample as
+    * the IVF centroids unless explicit `init`
     * centroids are passed (the sklearn `init=array` shape; also what
     * makes a planted oracle analytic: from fixed init, wide-margin
     * clusters converge identically on any engine).
@@ -336,30 +335,11 @@ object Similarity {
   def clusterEmbeddings(df: DataFrame, idCol: String, vecCol: String,
       nClusters: Int, lloydIters: Int = 2,
       init: Option[Array[Array[Double]]] = None): DataFrame = {
-    require(nClusters > 0, "need nClusters > 0")
     init.foreach(c => require(c.length == nClusters,
       s"init has ${c.length} centroids, expected $nClusters"))
-    val vecs = df
-      .select(col(vecCol).cast("array<double>").as("v"), xxhash64(col(idCol)).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = try {
-      val c0 = init.getOrElse(vecs.orderBy(col("h")).limit(nClusters)
-        .collect().map(_.getSeq[Double](0).toArray))
-      lloydRefine(vecs.select(col("v")), c0, lloydIters)
-    } finally vecs.unpersist(blocking = false)
-    // ONE evaluation of the nClusters cosines per row: the argmax is a
-    // max over (sim, -idx) structs (ties → first index, matching
-    // withIvfCid's array_position semantics), and the explode of the
-    // 1-element array is a Generate barrier — without it,
-    // ProjectCollapse inlines the struct into both output columns and
-    // the cosine array is computed twice per row (measured 2x on the
-    // k=64 probe).
-    val sims = array(cents.map(c => cosine(col("_cv"), typedlit(c))): _*)
-    val best = array_max(zip_with(sims,
-      sequence(lit(0), lit(cents.length - 1)),
-      (s, i) => struct(s.as("sim"), (-i).as("negidx"))))
+    val cents = lloyd(df, idCol, vecCol, nClusters, lloydIters, init)
     df.select(col(idCol), col(vecCol).cast("array<double>").as("_cv"))
-      .select(col(idCol), explode(array(best)).as("_b"))
+      .select(col(idCol), nearestCentroid(col("_cv"), cents).as("_b"))
       .select(col(idCol),
         (-col("_b.negidx")).cast("int").as("cid"),
         col("_b.sim").as("cos_to_centroid"))
@@ -433,27 +413,34 @@ object Similarity {
         round(avg(col("cos_to_centroid")), 6).as("mean_cos"),
         round(min(col("cos_to_centroid")), 6).as("min_cos"))
 
-  /** Attach the nearest-centroid id (argmax cosine). The argmax is a
-    * single max over (sim, -idx) structs behind a Generate barrier
-    * (explode of a 1-element array), so the nCentroids native cosines
-    * are evaluated EXACTLY once per row — the earlier
-    * array_position(x, array_max(x)) form let ProjectCollapse inline
-    * the staged array into both consumers, doubling the per-row cosine
-    * work (the r7-documented HOF-inlining trap, caught on the k=64
-    * probe). Ties keep first-index semantics: max of -idx is min idx.
-    * At scale, WRITE the table partitioned by this column — a probe
-    * then reads only nProbe directories.
+  /** The one argmax: the max over (score, -idx) structs of `scores`
+    * (an n-element array), so ties keep the first index (max of -idx
+    * is min idx). Fields `sim` and `negidx`.
     */
-  def withIvfCid(df: DataFrame, vecCol: String,
-      centroids: Array[Array[Double]], out: String): DataFrame = {
-    val sims = array(centroids.map(c => cosine(col(vecCol), typedlit(c))): _*)
-    val best = array_max(zip_with(sims,
-      sequence(lit(0), lit(centroids.length - 1)),
+  private[graft] def argmaxStruct(scores: Column, n: Int): Column =
+    array_max(zip_with(scores, sequence(lit(0), lit(n - 1)),
       (s, i) => struct(s.as("sim"), (-i).as("negidx"))))
-    df.select(col("*"), explode(array(best)).as("_b"))
+
+  /** Generator of the nearest centroid of `v` by cosine as one
+    * [[argmaxStruct]] row. The explode of the 1-element array is a
+    * Generate barrier, so the native cosines are evaluated EXACTLY once
+    * per row: without it ProjectCollapse inlines the struct into every
+    * consumer and the cosine array is computed twice per row (measured
+    * 2x on the k=64 probe).
+    */
+  private def nearestCentroid(v: Column, centroids: Array[Array[Double]]): Column =
+    explode(array(argmaxStruct(
+      array(centroids.map(c => cosine(v, typedlit(c))): _*), centroids.length)))
+
+  /** Attach the nearest-centroid id (argmax cosine, first index on
+    * ties). At scale, WRITE the table partitioned by this column — a
+    * probe then reads only nProbe directories.
+    */
+  private def withIvfCid(df: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]], out: String): DataFrame =
+    df.select(col("*"), nearestCentroid(col(vecCol), centroids).as("_b"))
       .withColumn(out, (-col("_b.negidx")).cast("int"))
       .drop("_b")
-  }
 
   /** IVF approximate top-k: probe the nProbe centroid cells nearest the
     * query, brute-force only within them. On a cid-partitioned table
@@ -463,13 +450,10 @@ object Similarity {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Array[Double], k: Int, nCentroids: Int = 16, nProbe: Int = 4,
       lloydIters: Int = 2): DataFrame = {
-    val centroids = ivfCentroids(df, idCol, vecCol, nCentroids, lloydIters)
+    val centroids = lloyd(df, idCol, vecCol, nCentroids, lloydIters, None)
     val probed = nearestCentroids(centroids, query, nProbe)
-    withIvfCid(Dedup.widen(df), vecCol, centroids, "ivf_cid")
-      .filter(col("ivf_cid").isin(probed.toIndexedSeq: _*))
-      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    bruteForceTopK(withIvfCid(Dedup.widen(df), vecCol, centroids, "ivf_cid")
+      .filter(col("ivf_cid").isin(probed.toIndexedSeq: _*)), idCol, vecCol, query, k)
   }
 
   /** Indices of the nProbe centroids nearest (by cosine) to the query. */
@@ -498,7 +482,7 @@ object Similarity {
       path: String, nCentroids: Int = 16, lloydIters: Int = 2,
       fixedCentroids: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
     val centroids = fixedCentroids.getOrElse(
-      ivfCentroids(df, idCol, vecCol, nCentroids, lloydIters))
+      lloyd(df, idCol, vecCol, nCentroids, lloydIters, None))
     withIvfCid(df, vecCol, centroids, "ivf_cid")
       .write.mode("overwrite").partitionBy("ivf_cid").parquet(path)
     val sidecar = java.nio.file.Paths.get(path, "_ivf_centroids.txt")
@@ -552,13 +536,9 @@ object Similarity {
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String, query: Array[Double], k: Int,
       nProbe: Int = 4): DataFrame = {
-    val centroids = loadIvfCentroids(path)
-    val probed = nearestCentroids(centroids, query, nProbe)
-    graft.ParquetSchemas.read(spark, path)
-      .filter(col("ivf_cid").isin(probed.toIndexedSeq: _*))
-      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    val probed = nearestCentroids(loadIvfCentroids(path), query, nProbe)
+    bruteForceTopK(graft.ParquetSchemas.read(spark, path)
+      .filter(col("ivf_cid").isin(probed.toIndexedSeq: _*)), idCol, vecCol, query, k)
   }
 
   /** SemDeDup-style semantic dedup sweep: embedding near-duplicate
@@ -585,24 +565,6 @@ object Similarity {
       .withColumn("keep", col("cluster_id") === df(idCol))
       .drop("_cc_id")
   }
-
-  // ---- int8 quantization: 4x smaller vectors for shuffle/storage ----
-
-  /** Per-vector symmetric int8 quantization: struct(scale, bytes) with
-    * scale = max|v| / 127. Shrinks an embedding column 4x (the storage
-    * and shuffle win at 100 TB); cosine on dequantized vectors stays
-    * within ~1% of the original for typical embeddings.
-    */
-  def quantizeInt8(v: Column): Column = {
-    val scale = greatest(array_max(transform(v, x => abs(x))), lit(1e-30)) / lit(127.0)
-    struct(
-      scale.cast("double").as("scale"),
-      transform(v, x => round(x / scale).cast("tinyint")).as("q"))
-  }
-
-  /** Inverse of [[quantizeInt8]]. */
-  def dequantizeInt8(qv: Column): Column =
-    transform(qv.getField("q"), x => x.cast("double") * qv.getField("scale"))
 
   /** Deterministic ±1 Achlioptas/JL sign for (output dim j, input dim
     * i): parity of the first hex digit of md5("rp:seed:j:i"). Any
@@ -641,6 +603,20 @@ object Similarity {
         col("col").as("val"))
   }
 
+  /** (id, v, sig0..sigN) — the multi-table LSH signature frame shared
+    * by [[knnGraphLsh]] and [[knnGraphIncrement]]. At 100 TB this is
+    * the persisted "index": write it once (optionally bucketed by a
+    * signature column) and daily batches join against it without
+    * re-signing the corpus.
+    */
+  def withLshSignatures(df: DataFrame, idCol: String, vecCol: String,
+      nBits: Int = 10, tables: Int = 4, dims: Int = 64): DataFrame = {
+    val sigCols = (0 until tables).map { t =>
+      signature(col(vecCol), hyperplanes(nBits, dims, seed = 42L + t)).as(s"sig$t")
+    }
+    df.select(Seq(col(idCol).as("id"), col(vecCol).as("v")) ++ sigCols: _*)
+  }
+
   /** Approximate kNN GRAPH over the whole embedding table — the
     * all-nodes neighbor structure behind embedding-based clustering,
     * diversity curation, and semantic-dedup sweeps (as opposed to
@@ -664,44 +640,48 @@ object Similarity {
     * approximate-by-design, like every LSH structure; raise `tables`
     * or lower `nBits` for denser recall.
     */
-  /** (id, v, sig0..sigN) — the multi-table LSH signature frame shared
-    * by [[knnGraphLsh]] and [[knnGraphIncrement]]. At 100 TB this is
-    * the persisted "index": write it once (optionally bucketed by a
-    * signature column) and daily batches join against it without
-    * re-signing the corpus.
-    */
-  def withLshSignatures(df: DataFrame, idCol: String, vecCol: String,
-      nBits: Int = 10, tables: Int = 4, dims: Int = 64): DataFrame = {
-    val sigCols = (0 until tables).map { t =>
-      signature(col(vecCol), hyperplanes(nBits, dims, seed = 42L + t)).as(s"sig$t")
-    }
-    df.select(Seq(col(idCol).as("id"), col(vecCol).as("v")) ++ sigCols: _*)
-  }
-
   def knnGraphLsh(df: DataFrame, idCol: String, vecCol: String, k: Int,
       nBits: Int = 10, tables: Int = 4, dims: Int = 64): DataFrame = {
     require(k > 0 && nBits > 0 && tables > 0, "k, nBits, tables must be positive")
-    import org.apache.spark.sql.expressions.Window
     // persist: tables×nBits×dims dot products per row, read by 2×tables
     // slim join sides plus the two vector-attach sides
     val signed = withLshSignatures(Dedup.widen(df), idCol, vecCol, nBits, tables, dims)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    knnEdges(signed, signed, tables, k)
+  }
+
+  /** The kNN candidate → exact re-rank tail shared by both graph
+    * builds: (src, dst) pairs sharing a bucket in any of `tables`
+    * signature columns (a pair colliding in m tables ranks once),
+    * vectors attached after the dedup, exact cosine, top k per src.
+    * Returns (src, dst, cos, rank).
+    */
+  private def knnEdges(srcs: DataFrame, dsts: DataFrame, tables: Int,
+      k: Int): DataFrame = {
     val cand = (0 until tables).map { t =>
-      val slim = signed.select(col("id"), col(s"sig$t").as("s"))
-      slim.select(col("id").as("src"), col("s"))
-        .join(slim.select(col("id").as("dst"), col("s")), Seq("s"))
+      srcs.select(col("id").as("src"), col(s"sig$t").as("s"))
+        .join(dsts.select(col("id").as("dst"), col(s"sig$t").as("s")), Seq("s"))
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
     }.reduce(_ unionByName _)
-      .dropDuplicates("src", "dst") // a pair colliding in m tables ranks once
-    val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    cand
-      .join(signed.select(col("id").as("src"), col("v").as("va")), Seq("src"))
-      .join(signed.select(col("id").as("dst"), col("v").as("vb")), Seq("dst"))
-      .select(col("src"), col("dst"), cosine(col("va"), col("vb")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .dropDuplicates("src", "dst")
+    rankWithin(cand
+      .join(srcs.select(col("id").as("src"), col("v").as("va")), Seq("src"))
+      .join(dsts.select(col("id").as("dst"), col("v").as("vb")), Seq("dst"))
+      .select(col("src"), col("dst"), cosine(col("va"), col("vb")).as("cos")),
+      "src", Seq(col("cos").desc, col("dst")), k, "rank")
   }
+
+  /** Rows of `df` ranked within each `key` by `order` into `rankCol`,
+    * the first k kept. Spark 4 rewrites the rank filter into
+    * WindowGroupLimit, so per-key top-k starts map-side, before the
+    * exchange.
+    */
+  private def rankWithin(df: DataFrame, key: String, order: Seq[Column],
+      k: Int, rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
 
   /** Incremental kNN-graph update — the daily-ingest path: edges for a
     * NEW batch of vectors against a stored corpus signature frame
@@ -727,25 +707,10 @@ object Similarity {
     val tables = sigCols(newSigned).size
     require(tables > 0 && sigCols(newSigned) == sigCols(corpusSigned),
       s"signature columns differ: batch=${sigCols(newSigned)} corpus=${sigCols(corpusSigned)}")
-    import org.apache.spark.sql.expressions.Window
     val batch = newSigned
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the batch joins the corpus AND itself (within-batch duplicates)
-    val all = corpusSigned.unionByName(batch)
-    val cand = (0 until tables).map { t =>
-      batch.select(col("id").as("src"), col(s"sig$t").as("s"))
-        .join(all.select(col("id").as("dst"), col(s"sig$t").as("s")), Seq("s"))
-        .filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"))
-    }.reduce(_ unionByName _)
-      .dropDuplicates("src", "dst")
-    val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    cand
-      .join(batch.select(col("id").as("src"), col("v").as("va")), Seq("src"))
-      .join(all.select(col("id").as("dst"), col("v").as("vb")), Seq("dst"))
-      .select(col("src"), col("dst"), cosine(col("va"), col("vb")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    knnEdges(batch, corpusSigned.unionByName(batch), tables, k)
   }
 
   /** Embedding-cosine near-duplicate pairs: equality join on the LSH
@@ -807,8 +772,8 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    // r16: one fused codegen'd loop nest (functions.PqEncode) instead
-    // of m·k interpreted aggregate(zip_with(...)) sub-distances — same
+    // one fused codegen'd loop nest (functions.PqEncode), not m·k
+    // interpreted aggregate(zip_with(...)) sub-distances — the same
     // arithmetic in the same order (left-to-right element sums,
     // NaN-greatest struct-min with ties to the lowest code, err summed
     // in subspace order), so codes and err are bit-identical and the
@@ -831,25 +796,33 @@ object Similarity {
   def pqAdcTopK(encoded: DataFrame, idCol: String, codesCol: String,
       codebooks: Array[Array[Array[Double]]], query: Array[Double],
       topK: Int): DataFrame = {
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    require(query.length == m * dsub, "query dims != m * dsub")
-    val dt: Array[Array[Double]] = Array.tabulate(m) { j =>
+    require(query.length == codebooks.length * codebooks.head.head.length,
+      "query dims != m * dsub")
+    rankTopK(encoded, idCol, adcDistance(col(codesCol), adcTable(codebooks, query)),
+      "approx_dist", desc = false, topK)
+  }
+
+  /** The query's m×k ADC table: squared L2 from each query subvector
+    * to each codeword of its subspace, a left-to-right double sum.
+    */
+  private def adcTable(codebooks: Array[Array[Array[Double]]],
+      query: Array[Double]): Array[Array[Double]] =
+    Array.tabulate(codebooks.length) { j =>
+      val dsub = codebooks(j).head.length
       val qs = query.slice(j * dsub, (j + 1) * dsub)
       codebooks(j).map { cw =>
-        var acc = 0.0
-        var i = 0
+        var acc = 0.0; var i = 0
         while (i < dsub) { val d = qs(i) - cw(i); acc += d * d; i += 1 }
         acc
       }
     }
-    val approx = (0 until m).map { j =>
-      element_at(typedlit(dt(j)), element_at(col(codesCol), j + 1) + 1)
-    }.reduceLeft(_ + _)
-    encoded.select(col(idCol), approx.as("approx_dist"))
-      .orderBy(col("approx_dist"), col(idCol))
-      .limit(topK)
-  }
+
+  /** ADC distance of a codes column: m literal-table lookups summed in
+    * subspace order.
+    */
+  private def adcDistance(codes: Column, dt: Array[Array[Double]]): Column =
+    dt.indices.map(j => element_at(typedlit(dt(j)), element_at(codes, j + 1) + 1))
+      .reduceLeft(_ + _)
 
   /** Quantized-space vector column: round(x · 2^20) per dimension,
     * held as integer-valued doubles. Training on this grid is what
@@ -883,7 +856,7 @@ object Similarity {
       var cbs = pqCodebooks(qdf, "_id", "_qv", m, k)
       val dsub = cbs.head.head.length
       for (_ <- 1 to iters) {
-        // assignment via ONE fused pq_encode per row (r16) — the same
+        // assignment via ONE fused pq_encode per row — the same
         // (dist, code) struct-min semantics, codegen'd (see PqEncode),
         // projected BEFORE the explode so it runs once per row
         val withCodes = qdf.select(col("_qv"),
@@ -913,41 +886,26 @@ object Similarity {
   }
 
   /** Mean recall@k of the ADC ranking against the exact squared-L2
-    * ranking over a BATCH of probe queries — single-probe recall is
-    * far too noisy to compare codebooks on (one draw swings 0.1–0.5),
-    * so the codebook-quality number must average. One distributed
-    * plan: both the exact and the ADC per-probe top-k compile to
-    * WindowGroupLimit over an exploded (probe, id, dist) frame — no
-    * driver loop, no per-probe job. The (probe) partitioning is
-    * |probes| groups; probe batches are small by construction (an
-    * audit samples tens of queries, not the corpus).
-    */
-  def pqRecallMean(df: DataFrame, idCol: String, vecCol: String,
-      codebooks: Array[Array[Array[Double]]],
-      probes: Seq[(Long, Array[Double])], k: Int): DataFrame =
-    pqRecallMeanMulti(df, idCol, vecCol, Seq("cb" -> codebooks), probes, k)
-      .select(col("k"), col("n_probes"), col("n_hits"), col("mean_recall"))
-
-  /** [[pqRecallMean]] for SEVERAL codebooks over the same corpus and
-    * probe batch in ONE distributed plan (r16): the exact ranking —
-    * identical for every codebook — is computed once and joined
-    * against the union of the per-codebook ADC rankings, instead of
-    * re-scanning the corpus per codebook (q_pq_gain previously ran the
-    * whole exact side twice). Per-codebook rows carry the label; a
-    * codebook with zero overlap still gets its row (left join), so the
-    * output is total exactly like the single-codebook form.
+    * ranking over a BATCH of probe queries, for SEVERAL codebooks over
+    * the same corpus — single-probe recall is far too noisy to compare
+    * codebooks on (one draw swings 0.1–0.5), so the codebook-quality
+    * number must average. One distributed plan: the exact and the ADC
+    * per-probe top-k compile to WindowGroupLimit over an exploded
+    * (probe, id, dist) frame — no driver loop, no per-probe job; the
+    * exact ranking, identical for every codebook, is computed once and
+    * joined against the union of the per-codebook ADC rankings by the
+    * grouped [[recallAtK]], so a codebook with zero overlap keeps its
+    * row. Probe batches are small by construction (an audit samples
+    * tens of queries, not the corpus).
     */
   def pqRecallMeanMulti(df: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[(String, Array[Array[Array[Double]]])],
       probes: Seq[(Long, Array[Double])], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(probes.nonEmpty, "need at least one probe")
     require(codebooks.nonEmpty, "need at least one codebook")
     val e = col(vecCol).cast("array<double>")
-    def topkPerProbe(pairs: DataFrame): DataFrame = pairs
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("p")).orderBy(col("d"), col("id"))))
-      .filter(col("rn") <= k).select(col("p"), col("id"))
+    def topkPerProbe(pairs: DataFrame): DataFrame =
+      rankWithin(pairs, "p", Seq(col("d"), col("id")), k, "rn").select(col("p"), col("id"))
     val exact = topkPerProbe(df.select(col(idCol).as("id"),
         explode(array(probes.map { case (p, q) =>
           struct(lit(p).as("p"),
@@ -955,39 +913,18 @@ object Similarity {
         }: _*)).as("s"))
       .select(col("id"), col("s.p").as("p"), col("s.d").as("d")))
     val adc = codebooks.map { case (label, cbs) =>
-      val m = cbs.length
-      val dts = probes.map { case (p, q) =>
-        p -> Array.tabulate(m) { j =>
-          val dsub = cbs(j).head.length
-          val qs = q.slice(j * dsub, (j + 1) * dsub)
-          cbs(j).map { cw =>
-            var acc = 0.0; var i = 0
-            while (i < dsub) { val d = qs(i) - cw(i); acc += d * d; i += 1 }
-            acc
-          }
-        }
-      }
       topkPerProbe(pqEncode(df, idCol, vecCol, cbs)
         .select(col(idCol).as("id"),
-          explode(array(dts.map { case (p, dt) =>
+          explode(array(probes.map { case (p, q) =>
             struct(lit(p).as("p"),
-              (0 until m).map(j => element_at(typedlit(dt(j)),
-                element_at(col("codes"), j + 1) + 1)).reduceLeft(_ + _).as("d"))
+              adcDistance(col("codes"), adcTable(cbs, q)).as("d"))
           }: _*)).as("s"))
         .select(col("id"), col("s.p").as("p"), col("s.d").as("d")))
         .withColumn("codebook", lit(label))
     }.reduce(_ unionByName _)
-    val hits = exact.join(adc, Seq("p", "id"))
-      .groupBy(col("codebook")).agg(count(lit(1)).as("_h"))
-    val spark = df.sparkSession
-    import spark.implicits._
-    codebooks.map(_._1).toDF("codebook")
-      .join(hits, Seq("codebook"), "left")
-      .select(col("codebook"), lit(k).as("k"),
-        lit(probes.length).as("n_probes"),
-        coalesce(col("_h"), lit(0L)).as("n_hits"),
-        round(coalesce(col("_h"), lit(0L)).cast("double") /
-          lit(k.toDouble * probes.length), 6).as("mean_recall"))
+    recallAtK(exact, adc, k, "codebook", codebooks.map(_._1), probes.length)
+      .select(col("codebook"), col("k"), lit(probes.length).as("n_probes"),
+        col("n_hits"), col("recall").as("mean_recall"))
   }
 
   /** Recall@k audit of the ADC ranking against the exact squared-L2
@@ -998,18 +935,14 @@ object Similarity {
   def pqRecall(df: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]], query: Array[Double],
       k: Int): DataFrame = {
-    val e = col(vecCol).cast("array<double>")
     // codegen'd, bit-identical to the HOF fold (see SqL2ToQuery)
-    val exactDist =
-      graft.functions.PqExpressions.sq_l2_to_query(e, query.toSeq)
-    val exact = df.select(col(idCol), exactDist.as("d"))
-      .orderBy(col("d"), col(idCol)).limit(k).select(col(idCol))
-    val adc = pqAdcTopK(pqEncode(df, idCol, vecCol, codebooks),
-      idCol, "codes", codebooks, query, k).select(col(idCol))
-    exact.join(adc, Seq(idCol))
-      .agg(count(lit(1)).as("n_hits"))
-      .select(lit(k).as("k"), col("n_hits"),
-        round(col("n_hits").cast("double") / lit(k.toDouble), 6).as("recall"))
+    val exactDist = graft.functions.PqExpressions.sq_l2_to_query(
+      col(vecCol).cast("array<double>"), query.toSeq)
+    recallAtK(
+      rankTopK(df, idCol, exactDist, "d", desc = false, k).select(col(idCol)),
+      pqAdcTopK(pqEncode(df, idCol, vecCol, codebooks),
+        idCol, "codes", codebooks, query, k).select(col(idCol)),
+      k)
   }
 
   /** IVF probe sweep: recall@k and candidate volume at each nProbe in
@@ -1036,16 +969,11 @@ object Similarity {
       val cells = nearestCentroids(centroids, query, p)
       val cand = cid.filter(
         col("ivf_cid").isin(cells.map(Int.box).toIndexedSeq: _*))
-      val top = cand
-        .select(col("id"), cosine(col("v"), typedlit(query)).as("sim"))
-        .orderBy(col("sim").desc, col("id")).limit(k)
-      val hits = top.join(truth, Seq("id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
+      val top = bruteForceTopK(cand, "id", "v", query, k).select(col("id"))
       cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(hits)
+        .crossJoin(recallAtK(truth, top, k))
         .select(lit(p).as("n_probe"), col("n_candidates"), col("n_hits"),
-          round(col("n_hits").cast("double") / lit(k.toDouble), 6)
-            .as(s"recall_at_$k"))
+          col("recall").as(s"recall_at_$k"))
     }.reduce(_.unionByName(_))
   }
 
@@ -1075,10 +1003,10 @@ object Similarity {
     * probe-keyed collect, then the greedy loop runs as a scalar
     * function over each probe's O(c²) integer matrix — O(c·k)
     * comparisons per probe, one row per probe through the function,
-    * probes parallelize freely, zero sequential jobs. (A previous
-    * version ran k cluster-wide rounds with a localCheckpoint each;
-    * the fixed per-round job overhead dominated the actual work by
-    * ~20× and did not amortize with scale.) The imperative greedy
+    * probes parallelize freely, zero sequential jobs. (k cluster-wide
+    * rounds with a localCheckpoint each would pay a fixed per-round
+    * job overhead that dominates the actual work ~20× and does not
+    * amortize with scale.) The imperative greedy
     * selection is a deliberate UDF: it is genuinely sequential
     * per-group logic over bounded arrays, not a per-row hot path.
     *

@@ -179,7 +179,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(recall >= 0.8, s"ANN recall $recall")
   }
 
-  test("IVF ANN finds planted near neighbors; quantization preserves ranking") {
+  test("IVF ANN finds planted near neighbors") {
     val rnd = new scala.util.Random(11)
     val dims = 64
     val query = Array.fill(dims)(rnd.nextGaussian())
@@ -191,15 +191,31 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     val recall = (1 to 10).count(i => ivf.contains(i.toLong)) / 10.0
     assert(recall >= 0.8, s"IVF recall $recall")
+  }
 
-    // int8 round-trip: cosine against the query barely moves
-    val rt = df.select(col("vec_id"),
-        Similarity.cosine(col("embedding"), typedlit(query)).as("exact"),
-        Similarity.cosine(
-          Similarity.dequantizeInt8(Similarity.quantizeInt8(col("embedding").cast("array<double>"))),
-          typedlit(query)).as("approx"))
-      .select(max(abs(col("exact") - col("approx")))).head().getDouble(0)
-    assert(rt < 0.02, s"max cosine drift after int8 round-trip: $rt")
+  test("LSH ANN signs every query dimension: a differing tail splits the bucket") {
+    // 200 rows equal to the probe on dims 1-64 with a random tail on
+    // 65-128: hyperplanes over only the first 64 dims would put every
+    // row in the probe's bucket and return all 200
+    val rnd = new scala.util.Random(21)
+    val head = Array.fill(64)(rnd.nextGaussian())
+    val query = head ++ Array.fill(64)(rnd.nextGaussian())
+    val df = (0L until 200L).map(i =>
+      (i, (head ++ Array.fill(64)(rnd.nextGaussian())).map(_.toFloat)))
+      .toDF("vec_id", "embedding")
+    val n = Similarity.annTopK(df, "vec_id", "embedding", query, k = 200, nBits = 12)
+      .count()
+    assert(n < 100, s"$n of 200 rows probed: the tail dims are not signed")
+  }
+
+  test("vectorOf: a missing id fails naming the column and the id") {
+    val df = Seq((1L, Array(1f, 2f))).toDF("vec_id", "embedding")
+    assert(Similarity.vectorOf(df, "vec_id", "embedding", 1L).toSeq == Seq(1.0, 2.0))
+    val e = intercept[NoSuchElementException] {
+      Similarity.vectorOf(df, "vec_id", "embedding", 7L)
+    }
+    assert(e.getMessage.contains("vec_id = 7") && e.getMessage.contains("embedding"),
+      e.getMessage)
   }
 
   test("persisted IVF index: probe prunes partitions and matches in-memory IVF") {
@@ -287,7 +303,9 @@ class PipelineOpsSpec extends AnyFunSuite {
       (id, (v :+ 7.0).map(_.toFloat)) // dim 17 constant = 7
     }
     val df = rows.toDF("vec_id", "embedding")
-    val got = Similarity.sq8TopK(df, "vec_id", "embedding", queryId = 0L, k = 5)
+    val b = Similarity.sq8Bounds(df, "embedding").orderBy("dim").collect()
+    val got = Similarity.sq8TopKFromBounds(df, "vec_id", "embedding",
+        b.map(_.getAs[Double]("mn")), b.map(_.getAs[Double]("mx")), queryId = 0L, k = 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     // dequantized-cosine ranking: the probe ranks itself first (raw
     // code DOTS would not guarantee this — the affine offsets bias
@@ -314,12 +332,18 @@ class PipelineOpsSpec extends AnyFunSuite {
     val b = Similarity.sq8Bounds(df, "embedding").orderBy("dim").collect()
     val mn = b.map(_.getAs[Double]("mn"))
     val mx = b.map(_.getAs[Double]("mx"))
-    // serving over pre-trained bounds is the SAME ranking the inline
-    // build produces (the bounds aggregate is deterministic min/max)
-    val inline = Similarity.sq8TopK(df, "vec_id", "embedding",
-      queryId = 0L, k = 4).collect().toSeq
-    val staged = Similarity.sq8TopKFromBounds(df, "vec_id", "embedding",
+    // serving over bounds staged through parquet is the SAME ranking
+    // the in-memory bounds produce (doubles round-trip bit-exactly)
+    val tmp = java.nio.file.Files.createTempDirectory("sq8_bounds").toFile
+    val sb = try {
+      Similarity.sq8Bounds(df, "embedding").write.parquet(s"$tmp/b")
+      spark.read.parquet(s"$tmp/b").orderBy("dim").collect()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    val inline = Similarity.sq8TopKFromBounds(df, "vec_id", "embedding",
       mn, mx, queryId = 0L, k = 4).collect().toSeq
+    val staged = Similarity.sq8TopKFromBounds(df, "vec_id", "embedding",
+      sb.map(_.getAs[Double]("mn")), sb.map(_.getAs[Double]("mx")),
+      queryId = 0L, k = 4).collect().toSeq
     assert(inline == staged)
     // similarity gaps here are orders of magnitude above the <=1/255
     // per-dim quantization error, so SQ8 agrees with the exact ranking

@@ -115,7 +115,8 @@ class Round8jSpec extends AnyFunSuite {
     val cb = Similarity.pqCodebooks(df, "id", "v", m = 2, k = 4)
     val probes = Seq(1L -> Array(1.0, 0.0, 0.0, 0.0),
       3L -> Array(0.0, 0.0, 1.0, 0.0))
-    val r = Similarity.pqRecallMean(df, "id", "v", cb, probes, k = 2).head()
+    val r = Similarity.pqRecallMeanMulti(df, "id", "v", Seq("cb" -> cb), probes, k = 2)
+      .head()
     assert(r.getAs[Int]("k") === 2)
     assert(r.getAs[Int]("n_probes") === 2)
     assert(r.getAs[Long]("n_hits") === 4L)
@@ -136,5 +137,43 @@ class Round8jSpec extends AnyFunSuite {
     assert(r.getAs[Int]("k") === 2)
     assert(r.getAs[Long]("n_hits") === 2L)
     assert(r.getAs[Double]("recall") === 1.0)
+  }
+
+  test("recallAtK: partial overlap counts the shared ids") {
+    val exact = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
+    val approx = Seq(1L, 3L, 5L, 8L, 9L).toDF("id")
+    val r = Similarity.recallAtK(exact, approx, k = 5).head()
+    assert(r.getAs[Int]("k") === 5)
+    assert(r.getAs[Long]("n_hits") === 3L)
+    assert(r.getAs[Double]("recall") === 0.6)
+  }
+
+  test("recallAtK: equal scores break by id the same way on both sides") {
+    // ids 1..4 point the probe's way (power-of-two scales keep every
+    // cosine the same double, every LSH signature the probe's); the top-2 cut keeps the two lowest ids in
+    // the exact and the approximate ranking alike, so the row order of
+    // the input cannot change the overlap
+    val df = Seq((4L, Array(1f, 1f)), (2L, Array(2f, 2f)), (3L, Array(4f, 4f)),
+      (1L, Array(8f, 8f))).toDF("id", "v")
+    val q = Array(1.0, 1.0)
+    val exact = Similarity.bruteForceTopK(df, "id", "v", q, k = 2)
+    val top = exact.collect()
+    assert(top.map(_.getLong(0)).toSeq === Seq(1L, 2L))
+    assert(top(0).getDouble(1) === top(1).getDouble(1))
+    val approx = Similarity.annTopK(df.repartition(3), "id", "v", q, k = 2)
+    val r = Similarity.recallAtK(exact.select("id"), approx.select("id"), k = 2).head()
+    assert(r.getAs[Long]("n_hits") === 2L)
+    assert(r.getAs[Double]("recall") === 1.0)
+  }
+
+  test("recallAtK grouped: a group with no hits keeps its row at n_hits 0") {
+    val exact = Seq((0L, 1L), (0L, 2L), (1L, 3L), (1L, 4L)).toDF("p", "id")
+    val approx = Seq((0L, 1L, "a"), (0L, 2L, "a"), (1L, 4L, "a"), (1L, 9L, "a"),
+      (0L, 7L, "b"), (1L, 8L, "b")).toDF("p", "id", "g")
+    val r = Similarity.recallAtK(exact, approx, k = 2, "g", Seq("a", "b", "c"),
+        queries = 2)
+      .orderBy("g").collect()
+      .map(x => (x.getString(0), x.getAs[Long]("n_hits"), x.getAs[Double]("recall")))
+    assert(r.toSeq === Seq(("a", 3L, 0.75), ("b", 0L, 0.0), ("c", 0L, 0.0)))
   }
 }
